@@ -15,8 +15,13 @@ Spark-native re-expression of the reference crypto engine (SURVEY.md
   reference's materials-provider caching: the batch is grouped by
   subject and one ``AESGCM`` object serves every value of that subject
   (SURVEY.md §4.3 hot-spot note).
-- Keys come from a **broadcast** ``subject → key`` map (the global
-  table analogue, ``KafkaSecretKeyStore.java:207-215``).
+- One kernel per direction (``_seal``, ``_open_rows``, ``_reseal``),
+  two ways to deliver keys to it: a **broadcast** ``subject → versions``
+  map (the global table analogue, ``KafkaSecretKeyStore.java:207-215``)
+  or a **key DataFrame** joined onto the rows, from which each batch
+  rebuilds the same map (``_batch_keys``). Either form carries every
+  key version of a subject, so rotated tables read the same way
+  through both.
 - Decrypt of a subject with no key is the *crypto-shredded* success
   path: the scan emits a tombstone (``content = NULL, shredded = true``)
   instead of the reference's ``MissingCryptoMaterialsException``
@@ -25,6 +30,10 @@ Spark-native re-expression of the reference crypto engine (SURVEY.md
 - Null content → null envelope; empty-string content passes through
   unencrypted (``JsonPersonalDataFieldDefinition.java:56-58`` empty
   no-op; ``OneOfPersonalDataFieldDefinition.java:66-72`` unset no-op).
+
+The kernels are module-level functions, so the UDF closures pickle
+them by reference and never capture cryptography's Rust-backed
+classes (which cannot be cloudpickled by value).
 """
 
 from __future__ import annotations
@@ -34,6 +43,8 @@ from typing import Mapping
 
 import numpy as np
 import pandas as pd
+from cryptography.exceptions import InvalidTag
+from cryptography.hazmat.primitives.ciphers.aead import AESGCM
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -76,97 +87,290 @@ def _resolve_keys(keys) -> Mapping[str, bytes]:
     return keys.value if hasattr(keys, "value") else keys
 
 
+def _batch_keys(subject: pd.Series, key: pd.Series) -> dict:
+    """Key-DataFrame delivery: the join repeats a subject's key entry
+    on every row of that subject, so the first row of each subject
+    gives this batch's ``subject → entry`` map — the same shape the
+    broadcast delivery hands the kernels."""
+    first = (subject.notna() & ~subject.duplicated()).to_numpy()
+    return dict(zip(subject.to_numpy()[first], key.to_numpy()[first]))
+
+
 def _versions(entry) -> list[tuple[str | None, bytes]] | None:
-    """Normalize one key-map value to an ordered version list
-    ``[(material_id, key), ...]`` (latest last). Unversioned maps
-    (``KeyRegistry.key_map`` — plain ``subject → key``) become a single
-    anonymous version; versioned maps (``key_map_versioned``) pass
-    through. ``None`` ⇒ subject has no materials (crypto-shredded)."""
+    """Normalize one subject's key entry to an ordered version list
+    ``[(material_id, key), ...]`` (latest last). A plain key
+    (``KeyRegistry.key_map``, or a user's own ``(subject_id, key
+    binary)`` table) becomes a single anonymous version; versioned
+    entries (``key_map_versioned`` pairs, or the
+    ``array<struct<material_id, key>>`` cells of ``KeyRegistry.key_df``,
+    which Arrow hands over as dicts) pass through. ``None`` ⇒ subject
+    has no materials (crypto-shredded)."""
     if entry is None:
         return None
     if isinstance(entry, (bytes, bytearray)):
         return [(None, bytes(entry))]
-    return [(m, bytes(k)) for m, k in entry]
+    return [
+        (e["material_id"], bytes(e["key"])) if isinstance(e, dict) else (e[0], bytes(e[1]))
+        for e in entry
+    ]
+
+
+def _material_id(kms_id) -> str | None:
+    """Material id of the sealing key embedded in an envelope's
+    ``kms_id`` (``<kms>#<mid>``); None for rows sealed under an
+    anonymous key (pre-rotation writers, unversioned maps)."""
+    return kms_id.split("#", 1)[1] if (kms_id and "#" in kms_id) else None
+
+
+def _kms_id(mid: str | None) -> str:
+    return KMS_ID if mid is None else f"{KMS_ID}#{mid}"
+
+
+class _SubjectMaterials:
+    """One subject's key versions inside one batch group, with one
+    ``AESGCM`` per material built on first use. ``open`` is the single
+    definition of which material(s) may have sealed a row; decrypt and
+    reencrypt both go through it."""
+
+    def __init__(self, subject, versions, strict: bool):
+        self.subject = subject
+        self.versions = versions or []
+        self.by_mid = dict(self.versions)
+        self.unversioned = len(self.versions) == 1 and self.versions[0][0] is None
+        self.strict = strict
+        self._aeads: dict = {}
+        self._chain: list | None = None
+
+    def aead(self, mid: str | None) -> AESGCM:
+        aead = self._aeads.get(mid)
+        if aead is None:
+            aead = self._aeads[mid] = AESGCM(self.by_mid[mid])
+        return aead
+
+    def _gone(self, why: str, cause: Exception | None = None) -> None:
+        """The sealing material no longer exists (shredded subject or
+        retired version): tombstone (None) when non-strict, raise
+        MISSING MATERIALS — not a corruption alarm — when strict."""
+        if self.strict:
+            raise MissingCryptoMaterialsError(why) from cause
+        return None
+
+    def open(self, kms_id, iv, data) -> bytes | None:
+        """Plaintext of one sealed row, or None when its material is
+        gone (see ``_gone``)."""
+        if not self.versions:
+            return self._gone(str(self.subject))
+        mid = _material_id(kms_id)
+        speculative = False
+        if mid is not None and mid not in self.by_mid:
+            if not self.unversioned:
+                # material destroyed (retired after rotation): same
+                # contract as a shredded subject
+                return self._gone(f"{self.subject} material {mid}")
+            # The subject's keys are one anonymous version
+            # (``KeyRegistry.key_map``): the embedded material id can
+            # never match, but the available key may well BE that
+            # material (it is, whenever the map was materialized after
+            # the same rotation that sealed this row). Attempt
+            # decryption with it — AES-GCM authentication makes a
+            # wrong-key attempt fail exactly, never yield garbage.
+            mid, speculative = None, True
+        if mid is None and not self.unversioned:
+            # mid-less row under VERSIONED keys: sealed before
+            # versioning, could be under any surviving version — or
+            # under one already retired (then every attempt fails
+            # authentication). Try newest→oldest; a wrong-version guess
+            # can never yield garbage plaintext, only InvalidTag.
+            if self._chain is None:
+                self._chain = [self.aead(m) for m, _ in reversed(self.versions)]
+            candidates = self._chain
+            speculative = True
+        else:
+            candidates = [self.aead(mid)]
+        iv, data = bytes(iv), bytes(data)
+        for aead in candidates[:-1]:
+            try:
+                return aead.decrypt(iv, data, None)
+            except InvalidTag:
+                pass
+        try:
+            return candidates[-1].decrypt(iv, data, None)
+        except InvalidTag as e:
+            # A speculative attempt that exhausts its candidates means
+            # the sealing material is no longer delivered — the
+            # destroyed-material contract. Only a non-speculative
+            # failure — the right key rejecting its own ciphertext — is
+            # corruption.
+            if speculative:
+                return self._gone(f"{self.subject}: no surviving material authenticates this row", e)
+            raise InvalidEncryptedMessageError(
+                f"authentication failed for subject {self.subject}"
+            ) from e
 
 
 def broadcast_keys(spark: SparkSession, key_map: Mapping[str, bytes]):
     """Ship the registry's materialized key map to executors once per
     pass — the Spark analogue of the reference's replicated global
-    key store (KafkaSecretKeyStore.java:207-215).
+    key store (KafkaSecretKeyStore.java:207-215). Accepts
+    ``KeyRegistry.key_map`` (latest key only) or
+    ``key_map_versioned`` (every version — needed to read rows sealed
+    before a rotation).
 
-    Scale cutover: a broadcast dict costs ~150 B/subject of driver AND
-    executor heap (10^6 subjects ≈ 150 MB — the practical ceiling).
-    Beyond that, pass a keyed ``(subject_id, key)`` **DataFrame** to
-    ``encrypt_table``/``decrypt_table`` instead (see
-    ``KeyRegistry.key_df``): the key distribution becomes a join that
-    Spark sizes itself (broadcast-hash while small, shuffle join at
-    10^7-10^8 subjects), with no driver materialization."""
+    This is one of two ways to deliver keys to the same encrypt/decrypt
+    kernels. Scale cutover: a broadcast dict costs ~150 B/subject of
+    driver AND executor heap (10^6 subjects ≈ 150 MB — the practical
+    ceiling). Beyond that, pass a **key DataFrame** (see
+    ``KeyRegistry.key_df``) to ``encrypt_table``/``decrypt_table``
+    instead: the key distribution becomes a join that Spark sizes
+    itself (broadcast-hash while small, shuffle join at 10^7-10^8
+    subjects), with no driver materialization."""
     return spark.sparkContext.broadcast(dict(key_map))
+
+
+def _seal(subject: pd.Series, value: pd.Series, keys: Mapping, pii_column: str) -> pd.DataFrame:
+    """Encrypt kernel: (subject, plaintext) batch → envelope batch,
+    with ``keys`` mapping each subject to its key entry."""
+    n = len(value)
+    out_subject = np.full(n, None, dtype=object)
+    out_kms = np.full(n, None, dtype=object)
+    out_data = np.full(n, None, dtype=object)
+    out_field = np.full(n, None, dtype=object)
+    out_transf = np.full(n, None, dtype=object)
+    out_iv = np.full(n, None, dtype=object)
+
+    frame = pd.DataFrame({"s": subject, "v": value})
+    if (frame["s"].isna() & frame["v"].notna()).any():
+        raise SubjectIdentifierRetrievalError(pii_column)
+    # Group by subject: one AESGCM object per subject per batch
+    # (per-subject key reuse, SURVEY.md §4.3).
+    for subj, grp in frame[frame["v"].notna()].groupby("s", sort=True):
+        versions = _versions(keys.get(subj))
+        if not versions:
+            raise MissingCryptoMaterialsError(str(subj))
+        # new writes always use the LATEST material (A18); its id
+        # travels in kms_id so post-rotation decrypts pick the
+        # right version (key rotation, maintenance.reencrypt)
+        mid, key = versions[-1]
+        aead = AESGCM(key)
+        idxs = grp.index.to_numpy()
+        vals = grp["v"].to_numpy()
+        nonce_pool = os.urandom(GCM_NONCE_BYTES * len(idxs))
+        out_subject[idxs] = subj
+        out_kms[idxs] = _kms_id(mid)
+        out_field[idxs] = pii_column
+        for j, (i, v) in enumerate(zip(idxs, vals)):
+            if len(v) == 0:
+                # empty no-op: passes through unencrypted
+                # (works for both "" and b"")
+                out_data[i] = b""
+                out_transf[i] = NOOP_TRANSFORMATION
+                out_iv[i] = b""
+            else:
+                nonce = nonce_pool[j * GCM_NONCE_BYTES : (j + 1) * GCM_NONCE_BYTES]
+                # binary PII (serialized sub-message bytes) is
+                # encrypted as-is; strings encode to UTF-8
+                payload = v if isinstance(v, (bytes, bytearray)) else v.encode("utf-8")
+                out_data[i] = aead.encrypt(nonce, bytes(payload), None)
+                out_transf[i] = TRANSFORMATION
+                out_iv[i] = nonce
+    return pd.DataFrame(
+        {
+            "subject_id": out_subject,
+            "kms_id": out_kms,
+            "data": out_data,
+            "personal_data_field": out_field,
+            "used_transformation": out_transf,
+            "initialization_vector": out_iv,
+        }
+    )
+
+
+def _open_rows(env: pd.DataFrame, keys: Mapping, strict: bool, binary: bool) -> pd.DataFrame:
+    """Decrypt kernel: envelope batch → (plaintext, shredded) batch."""
+    n = len(env)
+    content = np.full(n, None, dtype=object)
+    shredded = np.zeros(n, dtype=bool)
+    env = env.reset_index(drop=True)
+    present = env["subject_id"].notna()
+    for subj, grp in env[present].groupby("subject_id", sort=True):
+        mats = _SubjectMaterials(subj, _versions(keys.get(subj)), strict)
+        idxs = grp.index.to_numpy()
+        transfs = grp["used_transformation"].to_numpy()
+        datas = grp["data"].to_numpy()
+        ivs = grp["initialization_vector"].to_numpy()
+        kms_ids = grp["kms_id"].to_numpy()
+        for i, transf, data, iv, kid in zip(idxs, transfs, datas, ivs, kms_ids):
+            if transf == NOOP_TRANSFORMATION:
+                content[i] = b"" if binary else ""
+                continue
+            plain = mats.open(kid, iv, data)
+            if plain is None:
+                shredded[i] = True  # material gone: tombstone
+                continue
+            try:
+                content[i] = plain if binary else plain.decode("utf-8")
+            except UnicodeDecodeError as e:
+                raise InvalidEncryptedMessageError(
+                    f"plaintext for subject {subj} is not valid UTF-8"
+                ) from e
+    return pd.DataFrame({"content": content, "shredded": shredded})
+
+
+def _reseal(env: pd.DataFrame, keys: Mapping, rotate_set: set) -> pd.DataFrame:
+    """Reencrypt kernel: envelope batch → envelope batch with the rows
+    of ``rotate_set`` subjects resealed under their latest material."""
+    env = env.reset_index(drop=True)
+    out_data = env["data"].copy()
+    out_iv = env["initialization_vector"].copy()
+    out_kms = env["kms_id"].copy()
+    present = env["subject_id"].notna()
+    for subj, grp in env[present].groupby("subject_id", sort=True):
+        if subj not in rotate_set:
+            continue
+        versions = _versions(keys.get(subj))
+        if not versions:
+            raise MissingCryptoMaterialsError(str(subj))
+        # strict: a row whose material is gone cannot be resealed
+        mats = _SubjectMaterials(subj, versions, strict=True)
+        latest_mid = versions[-1][0]
+        enc_aead = mats.aead(latest_mid)
+        for i in grp.index.to_numpy():
+            if env.at[i, "used_transformation"] == NOOP_TRANSFORMATION:
+                continue
+            kid = env.at[i, "kms_id"]
+            if _material_id(kid) == latest_mid:
+                continue  # already current
+            plain = mats.open(kid, env.at[i, "initialization_vector"], env.at[i, "data"])
+            nonce = os.urandom(GCM_NONCE_BYTES)
+            out_data.at[i] = enc_aead.encrypt(nonce, plain, None)
+            out_iv.at[i] = nonce
+            out_kms.at[i] = _kms_id(latest_mid)
+    return pd.DataFrame(
+        {
+            "subject_id": env["subject_id"],
+            "kms_id": out_kms,
+            "data": out_data,
+            "personal_data_field": env["personal_data_field"],
+            "used_transformation": env["used_transformation"],
+            "initialization_vector": out_iv,
+        }
+    )
 
 
 def make_encrypt_udf(keys, pii_column: str):
     """Vectorized encrypt-swap (A8): (subject, plaintext) batches →
-    envelope struct batches."""
+    envelope struct batches. ``keys`` is a dict / Broadcast map, or a
+    key DataFrame — then the UDF takes the joined key column as a third
+    argument (see ``encrypt_table``)."""
+    if isinstance(keys, DataFrame):
 
-    def _encrypt(subject: pd.Series, value: pd.Series) -> pd.DataFrame:
-        # imported inside the UDF: cryptography's Rust-backed classes
-        # cannot be cloudpickled by value into the closure
-        from cryptography.hazmat.primitives.ciphers.aead import AESGCM
+        def _encrypt(subject: pd.Series, value: pd.Series, key: pd.Series) -> pd.DataFrame:
+            return _seal(subject, value, _batch_keys(subject, key), pii_column)
 
-        resolved = _resolve_keys(keys)
-        n = len(value)
-        out_subject = np.full(n, None, dtype=object)
-        out_kms = np.full(n, None, dtype=object)
-        out_data = np.full(n, None, dtype=object)
-        out_field = np.full(n, None, dtype=object)
-        out_transf = np.full(n, None, dtype=object)
-        out_iv = np.full(n, None, dtype=object)
+    else:
 
-        frame = pd.DataFrame({"s": subject, "v": value})
-        if (frame["s"].isna() & frame["v"].notna()).any():
-            raise SubjectIdentifierRetrievalError(pii_column)
-        # Group by subject: one AESGCM object per subject per batch
-        # (per-subject key reuse, SURVEY.md §4.3).
-        for subj, grp in frame[frame["v"].notna()].groupby("s", sort=True):
-            versions = _versions(resolved.get(subj))
-            if not versions:
-                raise MissingCryptoMaterialsError(str(subj))
-            # new writes always use the LATEST material (A18); its id
-            # travels in kms_id so post-rotation decrypts pick the
-            # right version (key rotation, maintenance.reencrypt)
-            mid, key = versions[-1]
-            aead = AESGCM(key)
-            idxs = grp.index.to_numpy()
-            vals = grp["v"].to_numpy()
-            nonce_pool = os.urandom(GCM_NONCE_BYTES * len(idxs))
-            out_subject[idxs] = subj
-            out_kms[idxs] = KMS_ID if mid is None else f"{KMS_ID}#{mid}"
-            out_field[idxs] = pii_column
-            for j, (i, v) in enumerate(zip(idxs, vals)):
-                if len(v) == 0:
-                    # empty no-op: passes through unencrypted
-                    # (works for both "" and b"")
-                    out_data[i] = b""
-                    out_transf[i] = NOOP_TRANSFORMATION
-                    out_iv[i] = b""
-                else:
-                    nonce = nonce_pool[j * GCM_NONCE_BYTES : (j + 1) * GCM_NONCE_BYTES]
-                    # binary PII (serialized sub-message bytes) is
-                    # encrypted as-is; strings encode to UTF-8
-                    payload = v if isinstance(v, (bytes, bytearray)) else v.encode("utf-8")
-                    out_data[i] = aead.encrypt(nonce, bytes(payload), None)
-                    out_transf[i] = TRANSFORMATION
-                    out_iv[i] = nonce
-        return pd.DataFrame(
-            {
-                "subject_id": out_subject,
-                "kms_id": out_kms,
-                "data": out_data,
-                "personal_data_field": out_field,
-                "used_transformation": out_transf,
-                "initialization_vector": out_iv,
-            }
-        )
+        def _encrypt(subject: pd.Series, value: pd.Series) -> pd.DataFrame:
+            return _seal(subject, value, _resolve_keys(keys), pii_column)
 
     return pandas_udf(ENVELOPE_SCHEMA)(_encrypt)
 
@@ -175,122 +379,18 @@ def make_decrypt_udf(keys, strict: bool = False, binary: bool = False):
     """Vectorized decrypt-swap (A9): envelope struct batches →
     (plaintext, shredded) struct batches. Missing key → tombstone
     (or raise when strict). ``binary=True`` returns raw bytes (binary
-    PII columns) instead of UTF-8 decoding."""
+    PII columns) instead of UTF-8 decoding. ``keys`` as for
+    ``make_encrypt_udf``: a key DataFrame adds the joined key column as
+    a second argument."""
+    if isinstance(keys, DataFrame):
 
-    def _decrypt(env: pd.DataFrame) -> pd.DataFrame:
-        from cryptography.exceptions import InvalidTag
-        from cryptography.hazmat.primitives.ciphers.aead import AESGCM
+        def _decrypt(env: pd.DataFrame, key: pd.Series) -> pd.DataFrame:
+            return _open_rows(env, _batch_keys(env["subject_id"], key), strict, binary)
 
-        resolved = _resolve_keys(keys)
-        n = len(env)
-        content = np.full(n, None, dtype=object)
-        shredded = np.zeros(n, dtype=bool)
-        env = env.reset_index(drop=True)
-        present = env["subject_id"].notna()
-        for subj, grp in env[present].groupby("subject_id", sort=True):
-            versions = _versions(resolved.get(subj))
-            if versions:
-                by_mid = dict(versions)
-                latest_aead = AESGCM(versions[-1][1])
-                # one AESGCM per distinct material in this batch group
-                aead_by_mid: dict = {None: latest_aead}
-            idxs = grp.index.to_numpy()
-            transfs = grp["used_transformation"].to_numpy()
-            datas = grp["data"].to_numpy()
-            ivs = grp["initialization_vector"].to_numpy()
-            kms_ids = grp["kms_id"].to_numpy()
-            for i, transf, data, iv, kid in zip(idxs, transfs, datas, ivs, kms_ids):
-                if transf == NOOP_TRANSFORMATION:
-                    content[i] = b"" if binary else ""
-                    continue
-                if not versions:
-                    # crypto-shredded subject: tombstone
-                    if strict:
-                        raise MissingCryptoMaterialsError(str(subj))
-                    shredded[i] = True
-                    continue
-                # kms_id may carry the material id of the encrypting
-                # key ("<kms>#<mid>"); rows without one (pre-rotation
-                # writers, unversioned maps) use the latest material
-                mid = kid.split("#", 1)[1] if (kid and "#" in kid) else None
-                unversioned = len(versions) == 1 and versions[0][0] is None
-                speculative = False
-                if mid is not None and mid not in by_mid:
-                    if unversioned:
-                        # The resolved map is an anonymous single version
-                        # (``KeyRegistry.key_map``): the embedded material
-                        # id can never match, but the available key may
-                        # well BE that material (it is, whenever the map
-                        # was materialized after the same rotation that
-                        # sealed this row). Attempt decryption with it —
-                        # AES-GCM authentication makes a wrong-key attempt
-                        # fail exactly, never yield garbage.
-                        mid = None
-                        speculative = True
-                    else:
-                        # material destroyed (retired after rotation):
-                        # same contract as a shredded subject
-                        if strict:
-                            raise MissingCryptoMaterialsError(f"{subj} material {mid}")
-                        shredded[i] = True
-                        continue
-                aead = aead_by_mid.get(mid)
-                if aead is None:
-                    aead = aead_by_mid[mid] = AESGCM(by_mid[mid])
-                # a mid-less row under a multi-version map (written
-                # before a rotation) could be under ANY version: GCM
-                # authentication makes try-decrypt exact, so fall back
-                # newest→oldest; a wrong-version guess can never yield
-                # garbage plaintext, only InvalidTag
-                if mid is None and not unversioned:
-                    # mid-less row under a VERSIONED map: sealed before
-                    # versioning, could be under any surviving version —
-                    # or under one already retired (then every attempt
-                    # fails authentication)
-                    if "__legacy__" not in aead_by_mid:
-                        aead_by_mid["__legacy__"] = [AESGCM(k) for _, k in reversed(versions)]
-                    candidates = aead_by_mid["__legacy__"]
-                    speculative = True
-                else:
-                    candidates = [aead]
-                plain = None
-                exhausted = False
-                for ci, cand in enumerate(candidates):
-                    try:
-                        plain = cand.decrypt(bytes(iv), bytes(data), None)
-                        break
-                    except InvalidTag as e:
-                        if ci == len(candidates) - 1:
-                            # Speculative attempts (embedded-mid row under
-                            # an anonymous map, or mid-less row under a
-                            # versioned map) that exhaust the chain mean
-                            # the sealing material is no longer in the
-                            # map — the destroyed-material contract:
-                            # tombstone when non-strict, raise MISSING
-                            # MATERIALS (not a corruption alarm) when
-                            # strict. Only a non-speculative failure —
-                            # the right key rejecting its own ciphertext
-                            # — is corruption.
-                            if speculative:
-                                if strict:
-                                    raise MissingCryptoMaterialsError(
-                                        f"{subj}: no surviving material authenticates this row"
-                                    ) from e
-                                exhausted = True
-                                break
-                            raise InvalidEncryptedMessageError(
-                                f"authentication failed for subject {subj}"
-                            ) from e
-                if exhausted:
-                    shredded[i] = True
-                    continue
-                try:
-                    content[i] = plain if binary else plain.decode("utf-8")
-                except UnicodeDecodeError as e:
-                    raise InvalidEncryptedMessageError(
-                        f"plaintext for subject {subj} is not valid UTF-8"
-                    ) from e
-        return pd.DataFrame({"content": content, "shredded": shredded})
+    else:
+
+        def _decrypt(env: pd.DataFrame) -> pd.DataFrame:
+            return _open_rows(env, _resolve_keys(keys), strict, binary)
 
     return pandas_udf(_decrypt_result(binary))(_decrypt)
 
@@ -298,8 +398,8 @@ def make_decrypt_udf(keys, strict: bool = False, binary: bool = False):
 def make_reencrypt_udf(keys, subjects):
     """Envelope → envelope rewrite for key rotation
     (``maintenance.reencrypt``): rows belonging to ``subjects`` whose
-    envelope was sealed under a non-latest material are decrypted with
-    the matching (or try-chained legacy) version and re-encrypted under
+    envelope was sealed under a non-latest material are opened exactly
+    as ``decrypt_table(strict=True)`` opens them and re-encrypted under
     the LATEST material, with the new material id stamped into
     ``kms_id``; every other row passes through byte-identical.
     ``keys`` must be a versioned map (``KeyRegistry.key_map_versioned``,
@@ -309,192 +409,20 @@ def make_reencrypt_udf(keys, subjects):
     rotate_set = set(subjects)
 
     def _reenc(env: pd.DataFrame) -> pd.DataFrame:
-        from cryptography.exceptions import InvalidTag
-        from cryptography.hazmat.primitives.ciphers.aead import AESGCM
-
-        resolved = _resolve_keys(keys)
-        env = env.reset_index(drop=True)
-        out_data = env["data"].copy()
-        out_iv = env["initialization_vector"].copy()
-        out_kms = env["kms_id"].copy()
-        present = env["subject_id"].notna()
-        for subj, grp in env[present].groupby("subject_id", sort=True):
-            if subj not in rotate_set:
-                continue
-            versions = _versions(resolved.get(subj))
-            if not versions:
-                raise MissingCryptoMaterialsError(str(subj))
-            by_mid = dict(versions)
-            latest_mid, latest_key = versions[-1]
-            latest_kms = KMS_ID if latest_mid is None else f"{KMS_ID}#{latest_mid}"
-            enc_aead = AESGCM(latest_key)
-            dec_by_mid: dict = {}
-            legacy: list | None = None
-            for i in grp.index.to_numpy():
-                if env.at[i, "used_transformation"] == NOOP_TRANSFORMATION:
-                    continue
-                kid = env.at[i, "kms_id"]
-                mid = kid.split("#", 1)[1] if (kid and "#" in kid) else None
-                if mid == latest_mid:
-                    continue  # already current
-                data, iv = bytes(env.at[i, "data"]), bytes(env.at[i, "initialization_vector"])
-                plain = None
-                if mid is not None:
-                    key = by_mid.get(mid)
-                    if key is None:
-                        raise MissingCryptoMaterialsError(f"{subj} material {mid}")
-                    aead = dec_by_mid.get(mid)
-                    if aead is None:
-                        aead = dec_by_mid[mid] = AESGCM(key)
-                    try:
-                        plain = aead.decrypt(iv, data, None)
-                    except InvalidTag as e:
-                        raise InvalidEncryptedMessageError(
-                            f"authentication failed for subject {subj}"
-                        ) from e
-                else:
-                    # legacy mid-less row: try-chain newest→oldest (GCM
-                    # auth rejects wrong versions exactly)
-                    if legacy is None:
-                        legacy = [AESGCM(k) for _, k in reversed(versions)]
-                    for ci, cand in enumerate(legacy):
-                        try:
-                            plain = cand.decrypt(iv, data, None)
-                            break
-                        except InvalidTag as e:
-                            if ci == len(legacy) - 1:
-                                raise InvalidEncryptedMessageError(
-                                    f"authentication failed for subject {subj}"
-                                ) from e
-                nonce = os.urandom(GCM_NONCE_BYTES)
-                out_data.at[i] = enc_aead.encrypt(nonce, plain, None)
-                out_iv.at[i] = nonce
-                out_kms.at[i] = latest_kms
-        return pd.DataFrame(
-            {
-                "subject_id": env["subject_id"],
-                "kms_id": out_kms,
-                "data": out_data,
-                "personal_data_field": env["personal_data_field"],
-                "used_transformation": env["used_transformation"],
-                "initialization_vector": out_iv,
-            }
-        )
+        return _reseal(env, _resolve_keys(keys), rotate_set)
 
     return pandas_udf(ENVELOPE_SCHEMA)(_reenc)
-
-
-def make_encrypt_udf_keyed(pii_column: str):
-    """Keyed-join variant of the encrypt-swap: the per-row key arrives
-    as a column (from a join against the key DataFrame) instead of a
-    broadcast map — the unbounded-subject-cardinality path."""
-
-    def _encrypt(subject: pd.Series, value: pd.Series, key: pd.Series) -> pd.DataFrame:
-        from cryptography.hazmat.primitives.ciphers.aead import AESGCM
-
-        n = len(value)
-        out = {
-            "subject_id": np.full(n, None, dtype=object),
-            "kms_id": np.full(n, None, dtype=object),
-            "data": np.full(n, None, dtype=object),
-            "personal_data_field": np.full(n, None, dtype=object),
-            "used_transformation": np.full(n, None, dtype=object),
-            "initialization_vector": np.full(n, None, dtype=object),
-        }
-        aeads: dict[bytes, "AESGCM"] = {}
-        for i in range(n):
-            v = value.iloc[i]
-            if v is None or (isinstance(v, float) and pd.isna(v)):
-                continue
-            subj = subject.iloc[i]
-            if subj is None:
-                raise SubjectIdentifierRetrievalError(pii_column)
-            out["subject_id"][i] = subj
-            out["kms_id"][i] = KMS_ID
-            out["personal_data_field"][i] = pii_column
-            if len(v) == 0:
-                out["data"][i] = b""
-                out["used_transformation"][i] = NOOP_TRANSFORMATION
-                out["initialization_vector"][i] = b""
-                continue
-            k = key.iloc[i]
-            if k is None:
-                raise MissingCryptoMaterialsError(str(subj))
-            k = bytes(k)
-            aead = aeads.get(k)
-            if aead is None:
-                aead = aeads[k] = AESGCM(k)
-            nonce = os.urandom(GCM_NONCE_BYTES)
-            payload = v if isinstance(v, (bytes, bytearray)) else v.encode("utf-8")
-            out["data"][i] = aead.encrypt(nonce, bytes(payload), None)
-            out["used_transformation"][i] = TRANSFORMATION
-            out["initialization_vector"][i] = nonce
-        return pd.DataFrame(out)
-
-    return pandas_udf(ENVELOPE_SCHEMA)(_encrypt)
-
-
-def make_decrypt_udf_keyed(strict: bool = False, binary: bool = False):
-    """Keyed-join variant of the decrypt-swap (see
-    ``make_encrypt_udf_keyed``); a NULL key column means the subject is
-    crypto-shredded → tombstone (or raise when strict)."""
-
-    def _decrypt(env: pd.DataFrame, key: pd.Series) -> pd.DataFrame:
-        from cryptography.exceptions import InvalidTag
-        from cryptography.hazmat.primitives.ciphers.aead import AESGCM
-
-        n = len(env)
-        content = np.full(n, None, dtype=object)
-        shredded = np.zeros(n, dtype=bool)
-        env = env.reset_index(drop=True)
-        key = key.reset_index(drop=True)
-        aeads: dict[bytes, "AESGCM"] = {}
-        for i in range(n):
-            subj = env["subject_id"].iloc[i]
-            if subj is None:
-                continue
-            transf = env["used_transformation"].iloc[i]
-            if transf == NOOP_TRANSFORMATION:
-                content[i] = b"" if binary else ""
-                continue
-            k = key.iloc[i]
-            if k is None:
-                if strict:
-                    raise MissingCryptoMaterialsError(str(subj))
-                shredded[i] = True
-                continue
-            k = bytes(k)
-            aead = aeads.get(k)
-            if aead is None:
-                aead = aeads[k] = AESGCM(k)
-            try:
-                plain = aead.decrypt(
-                    bytes(env["initialization_vector"].iloc[i]),
-                    bytes(env["data"].iloc[i]),
-                    None,
-                )
-                content[i] = plain if binary else plain.decode("utf-8")
-            except InvalidTag as e:
-                raise InvalidEncryptedMessageError(
-                    f"authentication failed for subject {subj}"
-                ) from e
-            except UnicodeDecodeError as e:
-                raise InvalidEncryptedMessageError(
-                    f"plaintext for subject {subj} is not valid UTF-8"
-                ) from e
-        return pd.DataFrame({"content": content, "shredded": shredded})
-
-    return pandas_udf(_decrypt_result(binary))(_decrypt)
 
 
 _KEY_COL = "__pi2_key"
 
 
 def _join_keys(df: DataFrame, spec: ProtectionSpec, key_df: DataFrame) -> DataFrame:
-    """Left-join the keyed (subject_id, key) DataFrame onto the table's
-    subject column as ``__pi2_key``. Spark picks the join strategy by
-    size (broadcast-hash while the key table is small, shuffle join
-    beyond), so subject cardinality is unbounded by driver memory."""
+    """Left-join the key DataFrame (``subject_id``, ``key``) onto the
+    table's subject column as ``__pi2_key``. Spark picks the join
+    strategy by size (broadcast-hash while the key table is small,
+    shuffle join beyond), so subject cardinality is unbounded by driver
+    memory."""
     kd = key_df.select(
         F.col("subject_id").alias("__pi2_subj"), F.col("key").alias(_KEY_COL)
     )
@@ -510,25 +438,26 @@ def encrypt_table(df: DataFrame, spec: ProtectionSpec, keys) -> DataFrame:
     No-PII spec → returned unchanged apart from the flag (driver
     short-circuit, A11).
 
-    ``keys`` is either a dict / Broadcast of ``subject → key`` (the
-    global-table analogue; fine to ~10^6 subjects) or a keyed
-    ``(subject_id, key)`` **DataFrame** — the unbounded-cardinality
-    join path (see ``broadcast_keys`` for the cutover)."""
+    ``keys`` delivers the keys to one encrypt kernel, either as a
+    dict / Broadcast map (``KeyRegistry.key_map`` or
+    ``key_map_versioned``; fine to ~10^6 subjects) or as a key
+    **DataFrame** (``KeyRegistry.key_df``: ``key`` is every version,
+    ``array<struct<material_id, key>>``, or a plain ``binary`` key) —
+    the unbounded-cardinality join path (see ``broadcast_keys`` for the
+    cutover). Either way rows are sealed under the subject's latest
+    material and stamped ``pi2spark-kms#<material_id>`` when the keys
+    are versioned."""
     if not spec.requires_encryption:
         return df.withColumn("shredded", F.lit(False))
     keyed = isinstance(keys, DataFrame)
     src = _join_keys(df, spec, keys) if keyed else df
+    key_args = [F.col(_KEY_COL)] if keyed else []
     cols: list[Column] = []
     for name in df.columns:
         if name in spec.pii_columns:
-            if keyed:
-                enc_udf = make_encrypt_udf_keyed(name)
-                enc = lambda s, v, _u=enc_udf: _u(s, v, F.col(_KEY_COL))  # noqa: E731
-            else:
-                enc_udf = make_encrypt_udf(keys, name)
-                enc = lambda s, v, _u=enc_udf: _u(s, v)  # noqa: E731
+            enc = make_encrypt_udf(keys, name)
             cols.append(
-                enc(F.col(spec.subject_column), F.col(name)).alias(
+                enc(F.col(spec.subject_column), F.col(name), *key_args).alias(
                     spec.envelope_column(name),
                     # envelope-slot marker: lets decrypt locate and
                     # validate the slot even off naming convention
@@ -548,14 +477,18 @@ def decrypt_table(df: DataFrame, spec: ProtectionSpec, keys, strict: bool = Fals
     tombstoned on disk (post-MERGE-shred, envelope NULL +
     shredded=true) stay tombstones.
 
-    ``keys``: dict / Broadcast map, or a keyed ``(subject_id, key)``
-    DataFrame for the join path (unbounded subject cardinality — a
-    subject absent from the key DataFrame joins to a NULL key, which
-    is exactly the crypto-shredded tombstone case)."""
+    ``keys``: dict / Broadcast map, or a key DataFrame for the join
+    path (unbounded subject cardinality — a subject absent from the key
+    DataFrame joins to a NULL key, which is exactly the
+    crypto-shredded tombstone case). Both feed one decrypt kernel, so
+    they read rotated tables identically: a row opens under the
+    material id in its ``kms_id``, and mid-less rows try every
+    delivered version newest→oldest."""
     if not spec.requires_encryption:
         return df
     keyed = isinstance(keys, DataFrame)
     out = _join_keys(df, spec, keys) if keyed else df
+    key_args = [F.col(_KEY_COL)] if keyed else []
     stored_flag = (
         F.coalesce(F.col("shredded"), F.lit(False)) if "shredded" in df.columns else F.lit(False)
     )
@@ -576,12 +509,8 @@ def decrypt_table(df: DataFrame, spec: ProtectionSpec, keys, strict: bool = Fals
         env_col = env_cols[name]
         binary = name in spec.binary_columns
         res = f"__dec_{name}"
-        if keyed:
-            dec_k = make_decrypt_udf_keyed(strict=strict, binary=binary)
-            out = out.withColumn(res, dec_k(F.col(env_col), F.col(_KEY_COL)))
-        else:
-            dec = make_decrypt_udf(keys, strict=strict, binary=binary)
-            out = out.withColumn(res, dec(F.col(env_col)))
+        dec = make_decrypt_udf(keys, strict=strict, binary=binary)
+        out = out.withColumn(res, dec(F.col(env_col), *key_args))
         out = out.withColumn(
             name,
             F.when(

@@ -1505,13 +1505,20 @@ def rotate_many_and_reencrypt(
     **kw,
 ) -> PassResult:
     """Rotate N subjects in ONE rewrite pass: mint a material per
-    subject (each recorded in the ledger before any wave — same
-    resume-idempotency contract as the single-subject flow), then a
-    single ``reencrypt`` over the UNION of affected files, then retire
-    per subject. A file holding rows of k rotating subjects is
-    rewritten once, not k times — the difference between O(files) and
-    O(files × subjects) when a rotation policy cycles a whole cohort
-    (e.g. scheduled annual rotation)."""
+    subject, then a single ``reencrypt`` over the UNION of affected
+    files, then retire per subject. A file holding rows of k rotating
+    subjects is rewritten once, not k times — the difference between
+    O(files) and O(files × subjects) when a rotation policy cycles a
+    whole cohort (e.g. scheduled annual rotation).
+
+    Resume-safe: the minted material ids are written to the pass
+    ledger BEFORE any file is rewritten, and a rerun with the same
+    ``pass_id`` reuses them instead of rotating again. Otherwise a
+    resume would mint fresh materials, replay ledger-cached waves
+    sealed under the previous ones, and the final retire would destroy
+    the only keys those rows were sealed under — silent, permanent
+    data loss. Retire also checks each recorded material is still the
+    registry's latest before redacting anything."""
     from pi2spark.crypto import broadcast_keys
 
     subjects = sorted(set(subject_ids))
@@ -1519,7 +1526,11 @@ def rotate_many_and_reencrypt(
         return PassResult("reencrypt", pass_id or _new_pass_id("reencrypt"), table.current_snapshot_id(), 0, 0, 0, 0.0, skipped=True)
     pass_id = pass_id or _new_pass_id("reencrypt")
     ledger = PassLedger(table.root, pass_id)
-    minted = ledger.meta("rotated_mids") or {}
+    # a ledger of the earlier single-subject flow holds one mint under
+    # "rotated_mid" without its subject: resumable only as a
+    # one-subject cohort (any other cohort fails the check below)
+    legacy = ledger.meta("rotated_mid")
+    minted = ledger.meta("rotated_mids") or ({subjects[0]: legacy} if legacy else {})
     if minted and set(minted) != set(subjects):
         # a resume must replay the SAME cohort: cached waves were
         # computed against the recorded subject set, and mixing them
@@ -1561,45 +1572,13 @@ def rotate_and_reencrypt(
     retire: bool = True,
     **kw,
 ) -> PassResult:
-    """The complete key-rotation flow: ROTATE (new material), reencrypt
-    the subject's files under it, then (by default) RETIRE the old
-    materials — physically redacting their key bytes from the command
-    log, so only ciphertext sealed under the new key remains readable
-    anywhere.
-
-    Resume-safe: the minted material id is written to the pass ledger
-    BEFORE any file is rewritten, and a rerun with the same ``pass_id``
-    reuses that material instead of rotating again. Without this, a
-    resume would mint a fresh material, replay ledger-cached waves that
-    still reference the previous one, and the final retire would
-    destroy the only key those rows were sealed under — silent,
-    permanent data loss. The retire additionally verifies the recorded
-    material is still the registry's latest before redacting anything."""
-    from pi2spark.crypto import broadcast_keys
-
-    pass_id = kw.pop("pass_id", None) or _new_pass_id("reencrypt")
-    ledger = PassLedger(table.root, pass_id)
-    minted = ledger.meta("rotated_mid")
-    if minted is None:
-        minted = registry.rotate(subject_id).material_id
-        ledger.record_meta("rotated_mid", minted)
-    elif registry.latest_material_id(subject_id) != minted:
-        # the registry moved on (another rotation) since this pass
-        # minted its material — resuming would seal fresh waves under a
-        # different key than the ledger-cached ones; refuse loudly
-        raise MissingCryptoMaterialsError(
-            f"resume of pass {pass_id!r}: recorded material {minted} is no "
-            f"longer the latest for subject {subject_id!r}; run a fresh "
-            "rotation pass instead of resuming this one"
-        )
-    keys = broadcast_keys(spark, registry.key_map_versioned())
-    res = reencrypt(table, spark, keys, [subject_id], pass_id=pass_id, **kw)
-    # ALWAYS attempt retirement (idempotent): a resume after a crash
-    # between the reencrypt commit and retire sees res.skipped=True —
-    # gating on it would leave the old key bytes live forever
-    if retire and registry.latest_material_id(subject_id) == minted:
-        registry.retire_old_materials(subject_id)
-    return res
+    """The complete key-rotation flow for one subject: ROTATE (new
+    material), reencrypt the subject's files under it, then (by
+    default) RETIRE the old materials — physically redacting their key
+    bytes from the command log, so only ciphertext sealed under the new
+    key remains readable anywhere. A one-subject cohort of
+    ``rotate_many_and_reencrypt``, with the same resume-safety."""
+    return rotate_many_and_reencrypt(table, spark, registry, [subject_id], retire=retire, **kw)
 
 
 def maintain(

@@ -316,7 +316,7 @@ class KeyRegistry:
         the key that encrypted each row (``pi2spark.crypto``), and the
         decrypt UDF picks the matching version. Broadcastable exactly
         like ``key_map`` — ``encrypt_table``/``decrypt_table`` accept
-        either form."""
+        either form; ``key_df`` is the same map as a DataFrame."""
         return {
             s: [(m.material_id, m.key) for m in mats]
             for s, mats in self._materials.items()
@@ -324,15 +324,25 @@ class KeyRegistry:
         }
 
     def key_df(self, spark):
-        """Materialized keys as a ``(subject_id string, key binary)``
-        DataFrame — the scale path: hand this to
+        """Materialized keys as a ``(subject_id string, key
+        array<struct<material_id string, key binary>>)`` DataFrame:
+        every version of each subject, latest last — the DataFrame form
+        of ``key_map_versioned``. The scale path: hand this to
         ``encrypt_table``/``decrypt_table`` instead of a broadcast map
         and the key distribution becomes a size-appropriate join
-        (see ``pi2spark.crypto.broadcast_keys`` for the cutover). A
-        deployment whose registry outgrows this driver-side registry
-        stores keys as a table and passes its scan here unchanged."""
-        rows = [(s, bytearray(m[-1].key)) for s, m in self._materials.items() if m]
-        return spark.createDataFrame(rows, "subject_id string, key binary")
+        (see ``pi2spark.crypto.broadcast_keys`` for the cutover); both
+        forms feed the same kernels, so rows sealed before a rotation
+        stay readable through either. A deployment whose registry
+        outgrows this driver-side registry stores keys as a table and
+        passes its scan instead; a plain ``key binary`` column there is
+        read as one anonymous version per subject."""
+        rows = [
+            (s, [(mid, bytearray(key)) for mid, key in versions])
+            for s, versions in self.key_map_versioned().items()
+        ]
+        return spark.createDataFrame(
+            rows, "subject_id string, key array<struct<material_id:string,key:binary>>"
+        )
 
     def subjects(self) -> set[str]:
         return set(self._materials.keys())

@@ -7,7 +7,10 @@ testing only here; the builder flags apply on a real cluster via
 daemon (``spark.python.daemon.module``) requires the package on the
 EXECUTORS' import path (``--py-files dist/pi2spark.zip`` provides it),
 and ``spark.local.dir`` should point at each node's fastest local
-scratch (``PI2SPARK_LOCAL_DIR``).
+scratch. The library never picks that location itself:
+``spark.local.dir`` is set only from ``PI2SPARK_LOCAL_DIR``, and left
+to Spark's own default (``SPARK_LOCAL_DIRS``, else the system temp
+dir) when that is unset — no silent switch to tmpfs.
 """
 
 from __future__ import annotations
@@ -38,22 +41,8 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             pkg_root + ((os.pathsep + existing) if existing else "")
         )
-    # Shuffle/scratch location (spark.local.dir): belongs on the
-    # fastest local medium — NVMe on a real cluster, tmpfs here. This
-    # sandbox's virtio disk shows 10-100x intermittent syscall stalls
-    # (BENCH/BASELINE.md) and ~20 GB of page-cache writeback per bench
-    # trial already competes for it; routing shuffle files to RAM takes
-    # ~2x the shuffle volume off the disk. Parameterised:
-    # PI2SPARK_LOCAL_DIR wins; default is /dev/shm only when it exists
-    # and has >4x headroom over a plausible shuffle (32 GiB free).
+    # scratch location is the deployment's decision (module docstring)
     local_dir = os.environ.get("PI2SPARK_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        try:
-            st = os.statvfs("/dev/shm")
-            if st.f_bavail * st.f_frsize >= 32 * (1 << 30):
-                local_dir = "/dev/shm/pi2spark-scratch"
-        except OSError:
-            pass
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)

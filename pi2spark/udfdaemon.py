@@ -15,8 +15,9 @@ whole stage was >10x slower than its useful work.
 
 CPython 3.12+ fixes this upstream by making the zipimporter re-read
 only when the archive's (mtime, size) changed (gh-84559 lineage /
-zipimport._read_directory caching). This module applies the same guard
-and then delegates to the stock pyspark daemon, preserving every other
+zipimport._read_directory caching). This module applies the same guard,
+keyed on the integer ``st_mtime_ns`` (a float ``st_mtime`` can round
+two nearby writes to the same value), and then delegates to the stock pyspark daemon, preserving every other
 behavior — including correctness of ``addPyFile``: replacing an
 archive updates its mtime/size, which invalidates the guard and forces
 the original full re-read.
@@ -42,7 +43,7 @@ def patch_zipimporter_invalidate_caches() -> None:
     def invalidate_caches(self):  # noqa: ANN001 — zipimporter instance
         try:
             st = os.stat(self.archive)
-            key = (st.st_mtime, st.st_size)
+            key = (st.st_mtime_ns, st.st_size)
         except OSError:
             key = None
         if key is not None and getattr(self, "_pi2_zip_stat", None) == key:

@@ -192,18 +192,6 @@ def _scaled_buckets(bounds: np.ndarray, vals: np.ndarray, bits: int) -> np.ndarr
     return np.minimum((ordinal * scale).astype(np.int64), (1 << bits) - 1)
 
 
-def make_bucket_udf(boundaries, column: str, bits: int = DEFAULT_BITS):
-    """value → scaled bucket ordinal via np.searchsorted."""
-
-    def _bucket(s: pd.Series) -> pd.Series:
-        b = boundaries.value if hasattr(boundaries, "value") else boundaries
-        bounds = np.asarray(b[column], dtype=object)
-        vals = s.fillna("").to_numpy(dtype=object)
-        return pd.Series(_scaled_buckets(bounds, vals, bits))
-
-    return pandas_udf(T.LongType())(_bucket)
-
-
 # ---------------------------------------------------------------------------
 # Morton interleave — pure column expression (JVM-side, codegen'd)
 # ---------------------------------------------------------------------------

@@ -48,27 +48,57 @@ def test_rotate_fold_and_replay(tmp_path):
         reg.rotate("never-registered")
 
 
-def test_mixed_version_decrypt(spark, tmp_path):
-    """Rows written before and after a rotation decrypt side by side:
-    the post-rotation rows carry the material id in kms_id; the
-    pre-rotation rows were written with an UNVERSIONED map (mid-less
-    kms_id) and resolve through the newest→oldest try-chain."""
+KEY_FORMS = {
+    "map": lambda spark, reg: broadcast_keys(spark, reg.key_map_versioned()),
+    "key_df": lambda spark, reg: reg.key_df(spark),
+}
+
+
+@pytest.mark.parametrize(
+    "seal_with, open_with",
+    [
+        ("map", "map"),
+        ("key_df", "map"),
+        ("key_df", "key_df"),
+        # ROADMAP item B: seal with the versioned map, rotate, then
+        # open with the key DataFrame
+        ("map", "key_df"),
+    ],
+)
+def test_mixed_version_decrypt(spark, tmp_path, seal_with, open_with):
+    """Rows written before and after a rotation decrypt side by side,
+    whichever way the keys are delivered for sealing and for opening.
+    The pre-rotation rows come in two kinds: written with an
+    UNVERSIONED map (mid-less kms_id — resolved through the
+    newest→oldest try-chain) and written with ``seal_with`` before the
+    rotation (stamped with the first material id, which must still
+    open after the rotation). The post-rotation rows carry the latest
+    material id."""
     reg = KeyRegistry(str(tmp_path / "cmd.jsonl"))
     reg.register_all(["sA", "sB"])
     old = encrypt_table(_df(spark, ["sA", "sB"], "old"), SPEC, broadcast_keys(spark, reg.key_map()))
     old_rows = old.collect()  # materialize before rotating
+    first = encrypt_table(_df(spark, ["sA"], "first"), SPEC, KEY_FORMS[seal_with](spark, reg))
+    first_rows = first.collect()
+    first_mid = reg.key_map_versioned()["sA"][-1][0]
+    assert {r.content_enc.kms_id for r in first_rows} == {f"pi2spark-kms#{first_mid}"}
     reg.rotate("sA")
-    keys_v = broadcast_keys(spark, reg.key_map_versioned())
-    new = encrypt_table(_df(spark, ["sA"], "new"), SPEC, keys_v)
+    new = encrypt_table(_df(spark, ["sA"], "new"), SPEC, KEY_FORMS[seal_with](spark, reg))
     # new sA rows are stamped with the latest material id
     mids = {r.content_enc.kms_id for r in new.collect() if r.content_enc.subject_id == "sA"}
     latest_mid = reg.key_map_versioned()["sA"][-1][0]
+    assert latest_mid != first_mid
     assert mids == {f"pi2spark-kms#{latest_mid}"}
-    both = spark.createDataFrame(old_rows, old.schema).unionByName(new)
-    out = decrypt_table(both, SPEC, keys_v, strict=True)
+    both = (
+        spark.createDataFrame(old_rows, old.schema)
+        .unionByName(spark.createDataFrame(first_rows, first.schema))
+        .unionByName(new)
+    )
+    out = decrypt_table(both, SPEC, KEY_FORMS[open_with](spark, reg), strict=True)
     assert out.filter(F.col("shredded")).count() == 0
     got = {(r.repo, r.path): r.content for r in out.collect()}
     assert got[("sA", "src/old/f0.py")] == "content-old-sA-0"
+    assert got[("sA", "src/first/f2.py")] == "content-first-sA-2"
     assert got[("sA", "src/new/f0.py")] == "content-new-sA-0"
     assert got[("sB", "src/old/f1.py")] == "content-old-sB-1"
 
