@@ -3,20 +3,30 @@ snapshot expiry (SURVEY.md §2 B3/B4/B7/B8/B9/B10).
 
 Execution model
 ---------------
-Compaction and shred rewrite their input files in **waves**: one wave
-= ONE Spark scan-and-write job over all of the wave's files, with
-**Spark's own scan packing doing the bin planning** —
-``spark.sql.files.maxPartitionBytes`` is set to the target file size
-(and ``openCostInBytes`` to 0) for the duration of the job, so the
-FileSourceScan packs small files into ~target-size partitions
-(greedy by size, the same first-fit idea as Iceberg's binpack) and
-the writer emits exactly one ~target-size file per partition. No
-shuffle at all; ciphertext moves opaquely (crypto is NOT re-run —
-the envelope column is just bytes to these passes). An oversized
-input splits across partitions (parquet is splittable) and simply
-yields several right-sized outputs.
+Every rewrite pass runs in **waves** through one driver
+(``_rewrite_files_in_waves``): one shuffle-free Spark job per wave,
+one ledger task per wave, with one of two writers.
 
-This is the third iteration of the pass's execution shape, chosen by
+- **Spark scan-and-write** (compact, delete/update, merge_into,
+  reencrypt): one scan over all of the wave's files, with **Spark's
+  own scan packing doing the bin planning** —
+  ``spark.sql.files.maxPartitionBytes`` is set to the target file size
+  (and ``openCostInBytes`` to 0) for the duration of the job, so the
+  FileSourceScan packs small files into ~target-size partitions
+  (greedy by size, the same first-fit idea as Iceberg's binpack) and
+  the writer emits exactly one ~target-size file per partition. An
+  oversized input splits across partitions (parquet is splittable)
+  and simply yields several right-sized outputs. Ciphertext moves
+  opaquely (crypto is NOT re-run — the envelope column is just bytes
+  to these passes).
+- **Arrow group writer** (shred; the cluster merge path): one pyarrow
+  task per output file, which writes it and returns its manifest
+  entry (footer stats + bloom) — no SQL plan and no stats read-back.
+  Shred rewrites each affected file 1:1 (same rows, same order, same
+  zkey range), streaming its row groups through the tombstone; the
+  merge packs consecutive zkey-ordered files and re-sorts them.
+
+The Spark writer's shape is the third iteration, chosen by
 measurement: round 2 ran one Spark job per bin from a driver thread
 pool (fixed ~0.3 s/job driver cost → parallelism-independent floor,
 2→8-core efficiency 0.37); a union-of-coalesced-branches wave fixed
@@ -41,6 +51,8 @@ as ~100 jobs, each fully distributed and shuffle-free.
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import time
 import uuid
@@ -129,69 +141,109 @@ def _rewrite_files_in_waves(
     ledger,
     files: list[DataFile],
     tag: str,
-    target_bytes: int,
+    target_bytes: int | None,
     transform=None,
     sort_col: str | None = None,
     wave_files: int = DEFAULT_WAVE_FILES,
     task_prefix: str = "",
+    arrow: bool = False,
+    task_name: str = "wave-",
 ) -> list[dict]:
-    """Rewrite data files into ~``target_bytes`` outputs, one Spark job
-    per wave of ``wave_files`` inputs (see module docstring): the scan
-    packs inputs into target-size partitions (maxPartitionBytes =
-    target, openCost = 0), the optional ``transform`` (e.g. the shred
-    tombstone projection, a broadcast join) and per-partition
-    ``sort_col`` sort are narrow, and the writer emits one file per
-    partition. Zero shuffles, one listing, one plan.
+    """Rewrite data files in waves of at most ``wave_files`` inputs, one
+    shuffle-free Spark job per wave, with one of two writers (see
+    module docstring):
+
+    - Spark (default): one scan over the wave's files, packed into
+      ~``target_bytes`` partitions (maxPartitionBytes = target,
+      openCost = 0); the optional ``transform`` (DataFrame ->
+      DataFrame, over the logical schema) and the per-partition
+      ``sort_col`` sort are narrow, and the writer emits one file per
+      partition. Output stats come from a read-back sweep
+      (``collect_data_files``).
+    - ``arrow=True``: the order-preserving group writer
+      (``rewrite_file_groups``), one Python task per output file.
+      Files pack consecutively up to ``target_bytes`` and re-sort on
+      ``sort_col`` (the cluster merge), or, with ``target_bytes=None``,
+      each file is its own group streamed through ``transform``
+      (``pa.Table -> pa.Table`` per row group — the 1:1 shred). The
+      write tasks return the output stats.
 
     Resume granularity is the wave: the ledger records one task per
-    wave with the wave's inputs/outputs; a rerun with the same pass_id
-    skips completed waves. Output stats are collected once per wave
-    (distributed via ``collect_data_files`` above its threshold)."""
+    wave (``<task_prefix><task_name><wave:05d>``) with the wave's
+    inputs/outputs; a rerun with the same pass_id skips completed
+    waves. A wave never splits a group."""
+    if arrow and target_bytes is not None:
+        groups = pack_consecutive(files, target_bytes)
+    else:
+        groups = [[f] for f in files]
+    waves: list[list[list[DataFile]]] = []
+    n_in = 0
+    for g in groups:
+        if not waves or n_in + len(g) > wave_files:
+            waves.append([])
+            n_in = 0
+        waves[-1].append(g)
+        n_in += len(g)
     stat_cols = table.stats_columns()
     bloom_cols = table.bloom_columns()
-    packer = _packer_session(spark, target_bytes)
+    packer = None if arrow else _packer_session(spark, target_bytes)
     results: list[dict] = []
-    for w, start in enumerate(range(0, len(files), wave_files)):
-        wave = files[start : start + wave_files]
-        task_id = f"{task_prefix}wave-{w:05d}"
+    for w, wave in enumerate(waves):
+        task_id = f"{task_prefix}{task_name}{w:05d}"
         prior = ledger.task_result(task_id)
         if prior:
             results.append(prior)
             continue
         s = time.time()
+        inputs = [f for g in wave for f in g]
         rel_dir, abs_dir = table.new_data_dir(f"{tag}-w{w:05d}")
-        paths = [os.path.join(table.root, f.path) for f in wave]
-        schema = table.data_schema()
-        reader = packer.read.schema(schema) if schema is not None else packer.read
-        # upgrade to the logical schema (no-op without evolution ops):
-        # transforms reference logical names (e.g. the shred tombstone
-        # join on the subject column), and rewritten files thereby
-        # migrate to the current schema — Iceberg's rewrite behavior
-        df = table.apply_schema_ops(reader.parquet(*paths))
-        if transform is not None:
-            df = transform(df)
-        if sort_col is not None and sort_col in df.columns:
-            # restore key order inside each packed partition (the
-            # pack concatenates sorted inputs; one in-memory sort
-            # per ~target-size partition re-merges them)
-            df = df.sortWithinPartitions(sort_col)
-        df.write.mode("overwrite").parquet(abs_dir)
-        rels = [
-            os.path.join(rel_dir, n)
-            for n in sorted(os.listdir(abs_dir))
-            if n.endswith(".parquet")
-        ]
-        added = collect_data_files(
-            table.root, rels, stat_cols, spark=spark, bloom_cols=bloom_cols
-        )
+        if arrow:
+            added = rewrite_file_groups(
+                table.root,
+                [
+                    (os.path.join(rel_dir, f"part-{i:05d}.parquet"), [f.path for f in g])
+                    for i, g in enumerate(wave)
+                ],
+                spark,
+                stat_cols,
+                bloom_cols=bloom_cols,
+                sort_col=sort_col,
+                transform=transform,
+            )
+        else:
+            schema = table.data_schema()
+            reader = packer.read.schema(schema) if schema is not None else packer.read
+            # upgrade to the logical schema (no-op without evolution
+            # ops): transforms reference logical names, and rewritten
+            # files thereby migrate to the current schema — Iceberg's
+            # rewrite behavior
+            df = table.apply_schema_ops(
+                reader.parquet(*[os.path.join(table.root, f.path) for f in inputs])
+            )
+            if transform is not None:
+                df = transform(df)
+            if sort_col is not None and sort_col in df.columns:
+                # restore key order inside each packed partition (the
+                # pack concatenates sorted inputs; one in-memory sort
+                # per ~target-size partition re-merges them)
+                df = df.sortWithinPartitions(sort_col)
+            df.write.mode("overwrite").parquet(abs_dir)
+            rels = [
+                os.path.join(rel_dir, n)
+                for n in sorted(os.listdir(abs_dir))
+                if n.endswith(".parquet")
+            ]
+            added = collect_data_files(
+                table.root, rels, stat_cols, spark=spark, bloom_cols=bloom_cols
+            )
         result = {
-            "inputs": [f.path for f in wave],
+            "inputs": [f.path for f in inputs],
             "outputs": [a.to_json() for a in added],
             "rows": sum(a.rows for a in added),
-            "bytes_in": sum(f.bytes for f in wave),
+            "bytes_in": sum(f.bytes for f in inputs),
         }
         ledger.record_task(
-            task_id, result, metrics={"seconds": time.time() - s, "n_files": len(wave)}
+            task_id, result, metrics={"seconds": time.time() - s, "n_files": len(inputs)}
         )
         results.append(result)
     return results
@@ -492,54 +544,22 @@ def _cluster_attempt(
             # sorts splits by size), so the merge uses the
             # order-preserving group writer: consecutive packing +
             # one pyarrow task per output file, stats in-task —
-            # zero shuffles, zero read-back. Groups run in WAVES of
-            # ``wave_files`` inputs (one job per wave, one ledger task
-            # each): resume granularity and the driver's in-flight
-            # path-list stay bounded at 10^6-file scale.
-            packs = pack_consecutive(ordered, target_file_bytes)
-            added, removed = [], []
-            wave_packs: list[list] = [[]]
-            for pack in packs:
-                if sum(len(p) for p in wave_packs[-1]) + len(pack) > DEFAULT_WAVE_FILES and wave_packs[-1]:
-                    wave_packs.append([])
-                wave_packs[-1].append(pack)
-            for w, wpacks in enumerate(wave_packs):
-                task_id = f"{prefix}merge-w{w:05d}"
-                prior = ledger.task_result(task_id)
-                if prior:
-                    added.extend(DataFile.from_json(d) for d in prior["outputs"])
-                    removed.extend(prior["inputs"])
-                    continue
-                ws = time.time()
-                rel_dir, _ = table.new_data_dir(f"{curve}-merge-{pass_id}-w{w:05d}")
-                groups = [
-                    (
-                        os.path.join(rel_dir, f"part-{i:05d}.parquet"),
-                        [f.path for f in pack],
-                    )
-                    for i, pack in enumerate(wpacks)
-                ]
-                wave_added = rewrite_file_groups(
-                    table.root,
-                    groups,
-                    spark,
-                    table.stats_columns(),
-                    bloom_cols=table.bloom_columns(),
-                    sort_col="zkey",
-                )
-                wave_removed = [f.path for pack in wpacks for f in pack]
-                ledger.record_task(
-                    task_id,
-                    {
-                        "inputs": wave_removed,
-                        "outputs": [a.to_json() for a in wave_added],
-                        "rows": sum(a.rows for a in wave_added),
-                        "bytes_in": sum(f.bytes for pack in wpacks for f in pack),
-                    },
-                    metrics={"seconds": time.time() - ws, "n_groups": len(groups)},
-                )
-                added.extend(wave_added)
-                removed.extend(wave_removed)
+            # zero shuffles, zero read-back, in bounded waves.
+            results = _rewrite_files_in_waves(
+                table,
+                spark,
+                ledger,
+                ordered,
+                f"{curve}-merge-{pass_id}",
+                target_bytes=target_file_bytes,
+                sort_col="zkey",
+                wave_files=DEFAULT_WAVE_FILES,
+                task_prefix=prefix,
+                arrow=True,
+                task_name="merge-w",
+            )
+            removed = [p for r in results for p in r["inputs"]]
+            added = [DataFile.from_json(d) for r in results for d in r["outputs"]]
             summary = {
                 "pass_id": pass_id,
                 "cluster_columns": list(columns),
@@ -672,6 +692,63 @@ def _cluster_attempt(
 # ---------------------------------------------------------------------------
 
 
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _tombstone(tbl, subjects, subject_cols, envelope_cols, flag_cols):
+    """The shred tombstone on one Arrow row group of one data file:
+
+    - ``hit := subject IN subjects`` (a NULL subject is not a hit);
+    - every envelope column present → NULL where ``hit``;
+    - ``shredded := coalesce(shredded, false) OR hit`` on every row.
+
+    Column lists name PHYSICAL columns (``Table.column_sources``) in
+    coalesce priority order, so a file written before a rename binds
+    its old names; members the file lacks read as NULL, exactly as
+    under the table's union schema. A file lacking every ``shredded``
+    source gains the flag under the highest-priority name (also in
+    Spark's footer schema, for schema-less reads)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def logical(cols):
+        present = [tbl[c] for c in cols if c in tbl.column_names]
+        if not present:
+            return None
+        return present[0] if len(present) == 1 else pc.coalesce(*present)
+
+    subj = logical(subject_cols)
+    if subj is None:
+        hit = pa.repeat(False, tbl.num_rows)
+    else:
+        hit = pc.is_in(subj, value_set=pa.array(subjects, type=subj.type))
+    for c in envelope_cols:
+        if c in tbl.column_names:
+            i = tbl.schema.get_field_index(c)
+            env = tbl[c]
+            tbl = tbl.set_column(
+                i, tbl.schema.field(i), pc.if_else(hit, pa.scalar(None, env.type), env)
+            )
+    if flag_cols:
+        cur = logical(flag_cols)
+        flag = hit if cur is None else pc.or_(pc.fill_null(cur, False), hit)
+        target = flag_cols[0]
+        if target in tbl.column_names:
+            i = tbl.schema.get_field_index(target)
+            tbl = tbl.set_column(i, tbl.schema.field(i), flag)
+        else:
+            tbl = tbl.append_column(pa.field(target, pa.bool_()), flag)
+            meta = dict(tbl.schema.metadata or {})
+            if _SPARK_ROW_METADATA in meta:
+                doc = json.loads(meta[_SPARK_ROW_METADATA])
+                doc["fields"].append(
+                    {"name": target, "type": "boolean", "nullable": True, "metadata": {}}
+                )
+                meta[_SPARK_ROW_METADATA] = json.dumps(doc).encode()
+                tbl = tbl.replace_schema_metadata(meta)
+    return tbl
+
+
 def shred(
     table: Table,
     spark: SparkSession,
@@ -680,19 +757,30 @@ def shred(
     envelope_columns=("content_enc",),
     concurrency: int = DEFAULT_CONCURRENCY,  # noqa: ARG001 — legacy, wave mode
     pass_id: str | None = None,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
+    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,  # noqa: ARG001 — rewrite is 1:1
     wave_files: int = DEFAULT_WAVE_FILES,
     max_replans: int = 3,
 ) -> PassResult:
     """MERGE-INTO-style erasure: rewrite **only** the data files whose
     stats may contain a forgotten subject, tombstoning that subject's
-    rows (envelope → NULL, shredded → true). All other files are
-    untouched manifest entries. Affected files rewrite in scan-packed
-    waves (``_rewrite_files_in_waves``) — one Spark job per wave,
-    ~target-size outputs, oversized inputs split naturally. The caller
-    must already have FORGOTTEN the subject's key
-    (``KeyRegistry.forget``) — key deletion is what makes the
-    ciphertext unrecoverable; this pass removes the bytes.
+    rows (envelope → NULL, shredded → true; see ``_tombstone``). All
+    other files are untouched manifest entries. The caller must already
+    have FORGOTTEN the subject's key (``KeyRegistry.forget``) — key
+    deletion is what makes the ciphertext unrecoverable; this pass
+    removes the bytes.
+
+    The rewrite is 1:1: each affected file becomes exactly one output
+    with the same rows in the same order (so the same zkey range —
+    the clustering layout and the merge path's provenance stay valid),
+    written by its own pyarrow task that streams the file's row groups
+    through the tombstone and returns the output's manifest entry
+    (footer stats + subject bloom). One shuffle-free Spark job per wave
+    of ``wave_files`` files, no Spark SQL plan, no stats read-back;
+    task memory is bounded by one row group. Oversized files are not
+    split and small ones not merged — that is ``compact``'s job — so
+    ``target_file_bytes`` is ignored. Rewritten files keep their
+    physical schema (logical names resolve through
+    ``Table.column_sources``), like any file untouched by evolution.
 
     Conflict re-planning (same protocol as ``compact``): a disjoint
     version race re-applies through ``commit_with_retry``; a winner
@@ -711,49 +799,38 @@ def shred(
         return PassResult("shred", pass_id, table.current_snapshot_id(), 0, 0, 0, 0.0, skipped=True)
 
     pred = ColumnPredicate(subject_column, "in", values=tuple(subjects))
-    forget_df = spark.createDataFrame(
-        [(s,) for s in subjects], f"{subject_column} string"
-    ).withColumn("__forget", F.lit(True))
-
-    def tombstone(df: DataFrame) -> DataFrame:
-        out = df.join(F.broadcast(forget_df), subject_column, "left")
-        hit = F.coalesce(F.col("__forget"), F.lit(False))
-        for env in envelope_columns:
-            if env in df.columns:
-                out = out.withColumn(env, F.when(hit, F.lit(None)).otherwise(F.col(env)))
-        # NULL-stored flags must not swallow a forget hit (NULL | true
-        # is NULL in SQL); tables without the lineage column still get
-        # their envelope bytes erased (mirrors decrypt_table's
-        # stored_flag handling).
-        if "shredded" in df.columns:
-            out = out.withColumn(
-                "shredded", F.coalesce(F.col("shredded"), F.lit(False)) | hit
-            )
-        return out.drop("__forget").select(*df.columns)
 
     def _attempt(attempt: int, prefix: str):
         snap = table.snapshot()
         affected = [f for f in snap.files if pred.may_match(f)]
         if not affected:
             return PassResult("shred", pass_id, snap.snapshot_id, 0, 0, 0, time.time() - t0, skipped=True)
-
-        # every affected file is rewritten regardless of size: scan
-        # packing merges the small ones toward target size and SPLITS
-        # oversized ones (parquet row groups are splittable) into
-        # several right-sized outputs (tests/test_shred_oversized.py).
-        # The tombstone projection is a broadcast join (narrow), and
-        # the per-partition zkey sort restores key order when clustered.
+        sources = table.column_sources()
+        if subject_column not in sources:
+            raise Pi2SparkError(f"subject column {subject_column!r} is not in the table schema")
+        # physical columns no logical column reads (dropped — e.g. a
+        # dropped PII column's envelope) are erased on hit rows too:
+        # the 1:1 rewrite keeps them on disk
+        live = {c for cols in sources.values() for c in cols}
+        dropped = [f.name for f in table.data_schema().fields if f.name not in live]
+        tombstone = functools.partial(
+            _tombstone,
+            subjects=subjects,
+            subject_cols=sources[subject_column],
+            envelope_cols=[c for env in envelope_columns for c in sources.get(env, [])] + dropped,
+            flag_cols=sources.get("shredded", []),
+        )
         results = _rewrite_files_in_waves(
             table,
             spark,
             ledger,
             sorted(affected, key=lambda f: f.path),
             f"shred-{pass_id}",
-            target_bytes=target_file_bytes,
+            target_bytes=None,
             transform=tombstone,
-            sort_col="zkey",
             wave_files=wave_files,
             task_prefix=prefix,
+            arrow=True,
         )
         removed = [p for r in results for p in r["inputs"]]
         added = [DataFile.from_json(d) for r in results for d in r["outputs"]]

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -34,13 +35,17 @@ def get_spark(
         shuffle_partitions = max(cores, 8)
     # Make this package importable by the worker interpreter regardless
     # of its cwd: the custom daemon module below ships in this package.
-    # Must happen before the JVM launches (the gateway inherits env).
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    existing = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            pkg_root + ((os.pathsep + existing) if existing else "")
-        )
+    # Must happen before the JVM launches (the gateway inherits env),
+    # and only then: with a context already active the JVM and its
+    # workers' environment exist, so changing the env would be a pure
+    # side effect on the host process.
+    if SparkContext._active_spark_context is None:
+        pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        existing = os.environ.get("PYTHONPATH", "")
+        if pkg_root not in existing.split(os.pathsep):
+            os.environ["PYTHONPATH"] = (
+                pkg_root + ((os.pathsep + existing) if existing else "")
+            )
     # scratch location is the deployment's decision (module docstring)
     local_dir = os.environ.get("PI2SPARK_LOCAL_DIR")
     builder = (

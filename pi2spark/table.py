@@ -253,12 +253,23 @@ def rewrite_file_groups(
     stat_cols: Sequence[str],
     bloom_cols: Sequence[str] = DEFAULT_BLOOM_COLUMNS,
     sort_col: str | None = None,
+    transform: Callable | None = None,
 ) -> list[DataFile]:
-    """Order-preserving distributed merge writer: one task per group,
-    each task pyarrow-reads its (consecutive) input files, optionally
-    re-sorts on ``sort_col``, writes ONE output file, and computes its
-    stats + blooms in the same task — a single shuffle-free Spark job
-    with no read-back pass for stats.
+    """Order-preserving distributed rewrite writer: one task per group,
+    each task pyarrow-reads its (consecutive) input files, writes ONE
+    output file, and computes its stats + blooms in the same task — a
+    single shuffle-free Spark job with no read-back pass for stats.
+
+    Two task shapes:
+
+    - ``sort_col`` set (the cluster() merge): the task reads its group
+      whole, concatenates and re-sorts on ``sort_col``. Task memory is
+      the decompressed size of one group, so size groups to the
+      compaction target (not more).
+    - otherwise (the shred rewrite): the task streams the group's row
+      groups one at a time through ``transform`` (``pa.Table ->
+      pa.Table``) into one writer — row order kept, task memory bounded
+      by one row group. A group's inputs must share one schema.
 
     This exists because Spark's scan packing cannot preserve file
     order (FileSourceScan sorts splits by size before binning), which
@@ -267,9 +278,12 @@ def rewrite_file_groups(
     disjoint. The data plane is pyarrow C++ in the Python worker —
     rows never cross into the JVM; only the manifest entries return.
 
-    ``groups`` is ``[(out_rel_path, [in_rel_paths...]), ...]``; task
-    memory is bounded by the decompressed size of one group, so size
-    groups to the compaction target (not more)."""
+    Timestamps: Spark writes INT96, which pyarrow would read as
+    nanoseconds (overflowing outside 1677–2262) and write back as
+    INT64 nanoseconds, a type Spark cannot read. Inputs are read at
+    microseconds and outputs written as INT64 microseconds.
+
+    ``groups`` is ``[(out_rel_path, [in_rel_paths...]), ...]``."""
     cols = list(stat_cols)
     bcols = list(bloom_cols)
     rootv = root
@@ -280,13 +294,31 @@ def rewrite_file_groups(
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        tables = [pq.read_table(os.path.join(rootv, r)) for r in rels]
-        tbl = tables[0] if len(tables) == 1 else pa.concat_tables(tables, promote_options="permissive")
-        if sortv and sortv in tbl.column_names:
-            tbl = tbl.sort_by(sortv)
+        def row_groups():
+            for r in rels:
+                pf = pq.ParquetFile(os.path.join(rootv, r), coerce_int96_timestamp_unit="us")
+                if pf.num_row_groups == 0:
+                    yield pf.schema_arrow.empty_table()
+                for i in range(pf.num_row_groups):
+                    yield pf.read_row_group(i)
+
+        stream = row_groups()
+        if sortv:
+            tbl = pa.concat_tables(list(stream), promote_options="permissive")
+            if sortv in tbl.column_names:
+                tbl = tbl.sort_by(sortv)
+            stream = iter([tbl])
+        if transform is not None:
+            stream = map(transform, stream)
         out_abs = os.path.join(rootv, out_rel)
         tmp = out_abs + ".inprogress"
-        pq.write_table(tbl, tmp, compression="snappy")
+        first = next(stream)
+        with pq.ParquetWriter(
+            tmp, first.schema, compression="snappy", coerce_timestamps="us"
+        ) as writer:
+            writer.write_table(first)
+            for tbl in stream:
+                writer.write_table(tbl)
         os.rename(tmp, out_abs)
         rows, size, stats, blooms, nulls = _footer_stats(out_abs, cols, bcols)
         return (out_rel, rows, size, json.dumps(stats), json.dumps(blooms), json.dumps(nulls))
@@ -1252,9 +1284,11 @@ class Table:
         and the physical union schema holds both — this projection
         coalesces them into the logical column. Renames on columns the
         frame lacks are no-ops, so the projection is valid for every
-        snapshot (time travel included). Maintenance rewrites route
-        through this too, so rewritten files are upgraded to the
-        logical schema as a side effect."""
+        snapshot (time travel included). The Spark-written maintenance
+        rewrites route through this too, so their outputs are upgraded
+        to the logical schema as a side effect; the Arrow per-file
+        rewrites (shred, the cluster merge) keep each file's physical
+        schema (shred binds logical names via ``column_sources``)."""
         ops = self.schema_ops()
         if not ops:
             return df
@@ -1275,25 +1309,33 @@ class Table:
                     df = df.drop(op["name"])
         return df
 
+    def column_sources(self) -> dict[str, list[str]]:
+        """Logical column -> the physical union-schema columns that
+        ``apply_schema_ops`` coalesces into it, highest priority first
+        (a rename's new name before its old one). A data file carries
+        some subset of them; its logical value is the first non-NULL.
+        Lets a per-file rewrite that never builds a DataFrame (the
+        shred tombstone) bind logical names to a file's physical
+        columns."""
+        schema = self.data_schema()
+        src = {f.name: [f.name] for f in schema.fields} if schema is not None else {}
+        for op in self.schema_ops():
+            if op["op"] == "rename":
+                old, new = op["from"], op["to"]
+                if old in src and new in src:
+                    src[new] = src[new] + src.pop(old)
+                elif old in src:
+                    src = {(new if k == old else k): v for k, v in src.items()}
+            elif op["op"] == "add":
+                src.setdefault(op["name"], [])
+            elif op["op"] == "drop":
+                src.pop(op["name"], None)
+        return src
+
     def _logical_columns(self) -> list[str]:
         """Column names of the current logical schema (physical union
         with evolution ops applied)."""
-        schema = self.data_schema()
-        names = [f.name for f in schema.fields] if schema is not None else []
-        for op in self.schema_ops():
-            if op["op"] == "rename":
-                if op["from"] in names:
-                    if op["to"] in names:
-                        names.remove(op["from"])
-                    else:
-                        names[names.index(op["from"])] = op["to"]
-            elif op["op"] == "add":
-                if op["name"] not in names:
-                    names.append(op["name"])
-            elif op["op"] == "drop":
-                if op["name"] in names:
-                    names.remove(op["name"])
-        return names
+        return list(self.column_sources())
 
     def add_column(self, name: str, dtype: str, pii: bool = False) -> None:
         """Add a nullable column to the logical schema (metadata-only —

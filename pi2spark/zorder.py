@@ -137,9 +137,7 @@ def column_boundaries_from_stats(
     Returns None — caller falls back to the sample job — when any
     input file lacks stats for any cluster column, a column's stats
     are non-string/non-numeric, or the overlap gate trips."""
-    total_rows = sum(f.rows for f in files) or 1
-    out: dict[str, list] = {}
-    any_clustered = False
+    ranges = []
     for c in columns:
         los, his, ws = [], [], []
         for f in files:
@@ -155,28 +153,41 @@ def column_boundaries_from_stats(
                 return None
             ws.append(max(f.rows, 1))
         is_str = isinstance(files[0].stats[c][0], str)
-        los = np.asarray(los, dtype=np.float64)
-        his = np.asarray(his, dtype=np.float64)
-        ws = np.asarray(ws, dtype=np.float64)
-        glo, ghi = los.min(), his.max()
-        if ghi > glo and float(np.mean(his - los)) / (ghi - glo) <= max_span_frac:
-            any_clustered = True
-        # discretize the uniform-mixture CDF: per file, n points spread
-        # linearly across its range, n proportional to its row count
-        pts: list[np.ndarray] = []
-        for lo, hi, w in zip(los, his, ws):
-            n = max(2, int(round(points_total * w / total_rows)))
-            pts.append(np.linspace(lo, hi, n))
-        vals = np.sort(np.concatenate(pts))
-        k = min((1 << bits) - 1, max_bounds, len(vals))
-        idx = np.linspace(0, len(vals) - 1, k + 2)[1:-1].astype(int)
-        bounds = vals[idx]
-        if is_str:
-            uniq = list(pd.unique(np.asarray([_unproj_str(int(b)) for b in bounds], dtype=object)))
-        else:
-            uniq = list(pd.unique(bounds))
-        out[c] = uniq
-    return out if any_clustered else None
+        ranges.append((c, is_str, np.asarray(los, dtype=np.float64),
+                       np.asarray(his, dtype=np.float64), np.asarray(ws, dtype=np.float64)))
+    # the overlap gate runs before any bounds are built: on a table
+    # where every file spans everything, building up to ``max_bounds``
+    # bounds per column (string ones decoded point by point) only to
+    # return None was the common case
+    if not any(
+        his.max() > los.min()
+        and float(np.mean(his - los)) / (his.max() - los.min()) <= max_span_frac
+        for _, _, los, his, _ in ranges
+    ):
+        return None
+    total_rows = sum(f.rows for f in files) or 1
+    return {
+        c: _bounds_from_ranges(los, his, ws, is_str, total_rows, bits, points_total, max_bounds)
+        for c, is_str, los, his, ws in ranges
+    }
+
+
+def _bounds_from_ranges(los, his, ws, is_str, total_rows, bits, points_total, max_bounds) -> list:
+    """Quantile boundaries of the row-weighted uniform mixture over the
+    per-file [lo, hi] ranges (see ``column_boundaries_from_stats``)."""
+    # discretize the uniform-mixture CDF: per file, n points spread
+    # linearly across its range, n proportional to its row count
+    pts: list[np.ndarray] = []
+    for lo, hi, w in zip(los, his, ws):
+        n = max(2, int(round(points_total * w / total_rows)))
+        pts.append(np.linspace(lo, hi, n))
+    vals = np.sort(np.concatenate(pts))
+    k = min((1 << bits) - 1, max_bounds, len(vals))
+    idx = np.linspace(0, len(vals) - 1, k + 2)[1:-1].astype(int)
+    bounds = vals[idx]
+    if is_str:
+        return list(pd.unique(np.asarray([_unproj_str(int(b)) for b in bounds], dtype=object)))
+    return list(pd.unique(bounds))
 
 
 def _scaled_buckets(bounds: np.ndarray, vals: np.ndarray, bits: int) -> np.ndarray:

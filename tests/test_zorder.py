@@ -3,6 +3,7 @@ hard-part 2) plus clustering-quality property."""
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from pi2spark.zorder import (
@@ -120,6 +121,32 @@ def test_stats_boundaries_overlap_gate_and_fallbacks():
     assert column_boundaries_from_stats(fresh, ["repo"], bits=16) is None
     missing = fresh[:1] + [DataFile(path="x", rows=1, bytes=1, stats={})]
     assert column_boundaries_from_stats(missing, ["repo"], bits=16) is None
+
+
+def test_stats_boundaries_gate_rejects_before_building_bounds(monkeypatch):
+    """The overlap gate is checked before any boundary is built: a
+    rejected table (every file spans everything, on every column,
+    string and numeric) never reaches the bounds builder."""
+    import pi2spark.zorder as Z
+    from pi2spark.table import DataFile
+
+    def boom(*a, **kw):
+        raise AssertionError("bounds built for a gate-rejected table")
+
+    monkeypatch.setattr(Z, "_bounds_from_ranges", boom)
+    fresh = [
+        DataFile(path=f"f{i}", rows=1000, bytes=10,
+                 stats={"repo": ["org000/a", "org199/z"], "n": [0, 10_000 - i]})
+        for i in range(40)
+    ]
+    assert Z.column_boundaries_from_stats(fresh, ["repo", "n"], bits=16) is None
+    # a passing gate does reach it
+    clustered = [
+        DataFile(path=f"f{i}", rows=1000, bytes=10, stats={"n": [i * 10, i * 10 + 9]})
+        for i in range(40)
+    ]
+    with pytest.raises(AssertionError, match="bounds built"):
+        Z.column_boundaries_from_stats(clustered, ["n"], bits=16)
 
 
 def test_cluster_uses_stats_boundaries_second_pass(spark, tmp_path):
