@@ -19,12 +19,14 @@ one ledger task per wave, with one of two writers.
   and simply yields several right-sized outputs. Ciphertext moves
   opaquely (crypto is NOT re-run — the envelope column is just bytes
   to these passes).
-- **Arrow group writer** (shred; the cluster merge path): one pyarrow
-  task per output file, which writes it and returns its manifest
-  entry (footer stats + bloom) — no SQL plan and no stats read-back.
-  Shred rewrites each affected file 1:1 (same rows, same order, same
-  zkey range), streaming its row groups through the tombstone; the
-  merge packs consecutive zkey-ordered files and re-sorts them.
+- **Arrow group writer** (shred; the cluster merge path; a cluster
+  whose input makes one output file): one pyarrow task per output
+  file, which writes it and returns its manifest entry (footer stats +
+  bloom) — no SQL plan and no stats read-back. Shred rewrites each
+  affected file 1:1 (same rows, same order, same zkey range),
+  streaming its row groups through the tombstone; the merge packs
+  consecutive zkey-ordered files and re-sorts them; the one-file
+  cluster keys its concatenated inputs and sorts them.
 
 The Spark writer's shape is the third iteration, chosen by
 measurement: round 2 ran one Spark job per bin from a driver thread
@@ -35,10 +37,12 @@ branch plus O(branches²) union analysis on the driver. One reader
 per wave pays the listing ONCE (JVM-parallel), builds one plan, and
 leaves the driver idle while executors stream data.
 
-Z-order is the only pass with a shuffle, and it is a single
-range-repartition on the cluster key with a tiebreaker column so
-mega-repo ties split across partitions (AQE-aware range
-partitioning, BASELINE.json:north_star).
+Z-order is the only pass with a shuffle, and only when its input
+makes more than one output file: a single range-repartition on the
+cluster key with a tiebreaker column so mega-repo ties split across
+partitions (AQE-aware range partitioning, BASELINE.json:north_star).
+The steady-state incremental pass — an append backlog under 1.5x the
+target — is one pyarrow task with no shuffle.
 
 Every pass takes a ``pass_id`` and writes a ``PassLedger`` (B10):
 killed mid-pass → rerun with the same id skips completed waves and
@@ -60,6 +64,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pi2spark.checkpoint import PassLedger
 from pi2spark.errors import (
@@ -72,11 +77,19 @@ from pi2spark.table import (
     ColumnPredicate,
     DataFile,
     Table,
+    align_spark_schema,
     collect_data_files,
     pack_consecutive,
     rewrite_file_groups,
 )
-from pi2spark.zorder import column_boundaries, column_boundaries_from_stats, with_cluster_key
+from pi2spark.zorder import (
+    check_cluster_key,
+    column_boundaries,
+    column_boundaries_from_stats,
+    curve_keys,
+    sample_bounds,
+    with_cluster_key,
+)
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 DEFAULT_CONCURRENCY = 8  # legacy knob, kept for CLI compat (wave mode ignores it)
@@ -458,14 +471,26 @@ def cluster(
 ) -> PassResult:
     """Clustering rewrite on the space-filling-curve key.
 
-    AT MOST one shuffle — and none at all when the input is already
-    range-partitioned on zkey (see the merge path in the body).
-    Otherwise: ``repartitionByRange(n, zkey, commit)`` — the range
-    partitioner samples the key (AQE-aware), and the ``commit``
-    tiebreaker splits mega-repo duplicate keys across partitions
-    instead of hot-spotting one reducer (B9 skew handling). Then
-    ``sortWithinPartitions(zkey)`` and one output file per partition;
-    per-file min/max on the clustered columns become tight, which is
+    AT MOST one shuffle, chosen by input size (``n_files``, the input's
+    manifest bytes over ``target_file_bytes``, rounded):
+
+    - already range-partitioned on zkey (several files with disjoint
+      zkey ranges and matching provenance): the no-shuffle merge path
+      (see the body);
+    - ``n_files == 1`` (input under 1.5x the target): ONE pyarrow task
+      reads and concatenates the inputs, takes each column's boundaries
+      from at most ``sample_rows`` of its own rows, keys them with the
+      key UDF's kernel, sorts on ``(zkey, tiebreak)`` and writes one
+      file with its stats (``_cluster_in_one_task``) — one Spark job,
+      no exchange, no read-back. ``boundaries_from_stats`` does not
+      apply;
+    - otherwise ``repartitionByRange(n, zkey, commit)`` — the range
+      partitioner samples the key (AQE-aware), and the ``commit``
+      tiebreaker splits mega-repo duplicate keys across partitions
+      instead of hot-spotting one reducer (B9 skew handling). Then
+      ``sortWithinPartitions(zkey)`` and one output file per partition.
+
+    Per-file min/max on the clustered columns become tight, which is
     what makes stats pruning (B2) and shred file-targeting (B8) cheap.
 
     ``incremental=True`` rewrites ONLY files not yet clustered
@@ -592,57 +617,15 @@ def _cluster_attempt(
     if prior:
         added = [DataFile.from_json(d) for d in prior["outputs"]]
     else:
-        df = table.apply_schema_ops(
-            table.reader(spark).parquet(*[os.path.join(table.root, f.path) for f in in_files])
-        )
-        # boundaries from MANIFEST stats when every input file carries
-        # them — zero Spark jobs (the sample job was this pass's
-        # parallelism-independent fixed cost); sample only as fallback
-        boundaries = (
-            column_boundaries_from_stats(in_files, list(columns), bits=bits)
-            if boundaries_from_stats
-            else None
-        )
-        if boundaries is None:
-            # bound the sampling scan to <=32 evenly spaced input files:
-            # boundaries only need approximate quantiles, and an even
-            # stride over the file list is representative whether the
-            # table is unclustered (every file spans everything) or
-            # partially clustered (stride covers the key space). Keeps
-            # the fallback's fixed cost flat as the file count grows.
-            if len(in_files) > 32:
-                stride = len(in_files) / 32.0
-                subset = [in_files[int(i * stride)] for i in range(32)]
-                sample_src = table.apply_schema_ops(
-                    table.reader(spark).parquet(
-                        *[os.path.join(table.root, f.path) for f in subset]
-                    )
-                )
-                subset_rows = sum(f.rows for f in subset)
-            else:
-                sample_src, subset_rows = df, sum(f.rows for f in in_files)
-            boundaries = column_boundaries(
-                sample_src,
-                list(columns),
-                bits=bits,
-                sample_rows=sample_rows,
-                total_rows=subset_rows,  # manifest knows; no count job
+        if n_files == 1:
+            added = _cluster_in_one_task(
+                table, spark, in_files, columns, curve, bits, sample_rows, f"{curve}-{pass_id}"
             )
-        bc = spark.sparkContext.broadcast(boundaries)
-        keyed = with_cluster_key(df, columns, bits=bits, curve=curve, boundaries=boundaries, broadcast=bc)
-        # NO persist of the keyed frame. repartitionByRange runs an
-        # internal sampling job over its input, so the zkey UDF
-        # executes twice — but the sampling job only evaluates the
-        # partition-key expressions, so Catalyst prunes its scan to the
-        # narrow cluster-key columns (never the fat payload column).
-        # Persisting the whole keyed table (round 1 did, DISK_ONLY)
-        # serialized the entire table through one shared disk three
-        # times and capped the pass's core-scaling at the disk, not the
-        # CPU: recomputing a cheap Arrow UDF over pruned columns scales
-        # with cores; a single disk does not.
-        tiebreak = "commit" if "commit" in df.columns else columns[-1]
-        clustered = keyed.repartitionByRange(n_files, F.col("zkey"), F.col(tiebreak)).sortWithinPartitions("zkey")
-        added = table.write_files(clustered, spark, tag=f"{curve}-{pass_id}")
+        else:
+            added = _cluster_with_shuffle(
+                table, spark, in_files, n_files, columns, curve, bits, sample_rows,
+                boundaries_from_stats, f"{curve}-{pass_id}",
+            )
         ledger.record_task(
             task_id,
             {
@@ -681,10 +664,156 @@ def _cluster_attempt(
             added_files=len(added),
             rewritten_bytes=total_bytes,
             seconds=time.time() - t0,
-            details={"n_files": n_files, "incremental": incremental, "replans": attempt},
+            details={
+                "mode": "one-task" if n_files == 1 else "shuffle",
+                "n_files": n_files,
+                "incremental": incremental,
+                "replans": attempt,
+            },
         )
 
     return added, [f.path for f in in_files], summ, finish_rewrite
+
+
+def _cluster_with_shuffle(
+    table, spark, in_files, n_files, columns, curve, bits, sample_rows,
+    boundaries_from_stats, tag,
+) -> list[DataFile]:
+    """Cluster ``in_files`` into ``n_files`` outputs through one range
+    shuffle: boundaries (manifest stats, else a sample job), the key
+    UDF, ``repartitionByRange(n_files, zkey, tiebreak)``, a sort within
+    each partition, ``Table.write_files`` and its stats read-back."""
+    df = table.apply_schema_ops(
+        table.reader(spark).parquet(*[os.path.join(table.root, f.path) for f in in_files])
+    )
+    # boundaries from MANIFEST stats when every input file carries
+    # them — zero Spark jobs (the sample job was this pass's
+    # parallelism-independent fixed cost); sample only as fallback
+    boundaries = (
+        column_boundaries_from_stats(in_files, list(columns), bits=bits)
+        if boundaries_from_stats
+        else None
+    )
+    if boundaries is None:
+        # bound the sampling scan to <=32 evenly spaced input files:
+        # boundaries only need approximate quantiles, and an even
+        # stride over the file list is representative whether the
+        # table is unclustered (every file spans everything) or
+        # partially clustered (stride covers the key space). Keeps
+        # the fallback's fixed cost flat as the file count grows.
+        if len(in_files) > 32:
+            stride = len(in_files) / 32.0
+            subset = [in_files[int(i * stride)] for i in range(32)]
+            sample_src = table.apply_schema_ops(
+                table.reader(spark).parquet(
+                    *[os.path.join(table.root, f.path) for f in subset]
+                )
+            )
+            subset_rows = sum(f.rows for f in subset)
+        else:
+            sample_src, subset_rows = df, sum(f.rows for f in in_files)
+        boundaries = column_boundaries(
+            sample_src,
+            list(columns),
+            bits=bits,
+            sample_rows=sample_rows,
+            total_rows=subset_rows,  # manifest knows; no count job
+        )
+    bc = spark.sparkContext.broadcast(boundaries)
+    try:
+        keyed = with_cluster_key(df, columns, bits=bits, curve=curve, boundaries=boundaries, broadcast=bc)
+        # NO persist of the keyed frame. repartitionByRange runs an
+        # internal sampling job over its input, so the zkey UDF
+        # executes twice. That job is NOT pruned to the key columns:
+        # Spark samples the exchange's full child (``rddForSampling``),
+        # a full-width scan plus the key UDF — on an erase relayout it
+        # took about as long as the map stage writing the shuffle
+        # itself. Persisting the whole keyed table (round 1 did,
+        # DISK_ONLY) instead serialized the entire table through one
+        # shared disk three times and capped the pass's core-scaling
+        # at the disk, not the CPU.
+        tiebreak = "commit" if "commit" in df.columns else columns[-1]
+        clustered = keyed.repartitionByRange(n_files, F.col("zkey"), F.col(tiebreak)).sortWithinPartitions("zkey")
+        return table.write_files(clustered, spark, tag=tag)
+    finally:
+        # each broadcast keeps a file in the driver's temp dir until
+        # destroyed; a long-running maintain() loop must not grow it
+        bc.destroy()
+
+
+def _with_curve_key(tbl, columns, sources, curve, bits, sample_rows):
+    """The one-task clustering transform on one concatenated group:
+
+    - a logical column whose group mixes physical sources (files from
+      both sides of a rename) coalesces into the first source present
+      and drops the others, so the output's stats and bloom for it
+      cover every row;
+    - ``zkey`` := ``zorder.curve_keys`` over the logical cluster
+      columns, bucketed on boundaries (``zorder.sample_bounds``) taken
+      from at most ``sample_rows`` evenly spaced rows of the group. It
+      replaces an existing ``zkey`` column. Keys are computed in
+      batches, so only one batch of values is ever in pandas form."""
+    import numpy as np
+    import pyarrow as pa
+
+    for srcs in sources.values():
+        present = [c for c in srcs if c in tbl.column_names]
+        if len(present) > 1:
+            i = tbl.schema.get_field_index(present[0])
+            tbl = tbl.set_column(i, tbl.schema.field(i), _logical(tbl, present))
+            tbl = align_spark_schema(tbl.drop_columns(present[1:]))
+    n = tbl.num_rows
+    values = [_logical(tbl, sources[c]) for c in columns]
+    values = [pa.nulls(n, pa.string()) if v is None else v for v in values]
+    if n > sample_rows:
+        pick = np.linspace(0, n - 1, sample_rows).astype(np.int64)
+        bounds = {c: sample_bounds(v.take(pick).to_pandas(), bits) for c, v in zip(columns, values)}
+    else:
+        bounds = {c: sample_bounds(v.to_pandas(), bits) for c, v in zip(columns, values)}
+    step = 1 << 16
+    zkey = pa.chunked_array(
+        [
+            curve_keys(bounds, [v.slice(lo, step).to_pandas() for v in values], columns, bits, curve)
+            for lo in range(0, n, step)
+        ],
+        type=pa.int64(),
+    )
+    return _put_column(tbl, "zkey", zkey, "long")
+
+
+def _cluster_in_one_task(table, spark, in_files, columns, curve, bits, sample_rows, tag) -> list[DataFile]:
+    """Cluster inputs that make ONE output file in one pyarrow task
+    (``rewrite_file_groups`` with a single group): it concatenates the
+    inputs, keys them (``_with_curve_key``), sorts on ``(zkey,
+    tiebreak)``, writes the file and returns its manifest entry. One
+    Spark job: no sample job, no exchange, no stats read-back.
+
+    Logical names bind to each file's physical columns through
+    ``Table.column_sources`` (the output keeps physical names, as a
+    shred output does); the tiebreak is ``commit`` when the table has
+    it, else the last cluster column."""
+    columns = list(columns)
+    check_cluster_key(columns, bits, curve)
+    sources = table.column_sources()
+    missing = [c for c in columns if c not in sources]
+    if missing:
+        raise Pi2SparkError(f"cluster columns {missing} are not in the table schema")
+    tiebreak = "commit" if "commit" in sources else columns[-1]
+    if table.data_schema() is not None:
+        table._persist_schema(T.StructType([T.StructField("zkey", T.LongType())]))
+    rel_dir, _ = table.new_data_dir(tag)
+    return rewrite_file_groups(
+        table.root,
+        [(os.path.join(rel_dir, "part-00000.parquet"), [f.path for f in in_files])],
+        spark,
+        table.stats_columns(),
+        bloom_cols=table.bloom_columns(),
+        sort_col=["zkey", *sources[tiebreak]],
+        transform=functools.partial(
+            _with_curve_key, columns=columns, sources=sources, curve=curve, bits=bits,
+            sample_rows=sample_rows,
+        ),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -692,7 +821,29 @@ def _cluster_attempt(
 # ---------------------------------------------------------------------------
 
 
-_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+def _logical(tbl, cols):
+    """One logical column of an Arrow table from its physical sources
+    (``Table.column_sources`` order): the first non-NULL of those the
+    table has, or None when it has none of them."""
+    import pyarrow.compute as pc
+
+    present = [tbl[c] for c in cols if c in tbl.column_names]
+    if not present:
+        return None
+    return present[0] if len(present) == 1 else pc.coalesce(*present)
+
+
+def _put_column(tbl, name, values, spark_type: str):
+    """Set column ``name`` in place, or append it (also to Spark's
+    footer schema JSON, for schema-less reads)."""
+    import pyarrow as pa
+
+    if name in tbl.column_names:
+        i = tbl.schema.get_field_index(name)
+        return tbl.set_column(i, tbl.schema.field(i).with_type(values.type), values)
+    return align_spark_schema(
+        tbl.append_column(pa.field(name, values.type), values), {name: spark_type}
+    )
 
 
 def _tombstone(tbl, subjects, subject_cols, envelope_cols, flag_cols):
@@ -706,18 +857,11 @@ def _tombstone(tbl, subjects, subject_cols, envelope_cols, flag_cols):
     coalesce priority order, so a file written before a rename binds
     its old names; members the file lacks read as NULL, exactly as
     under the table's union schema. A file lacking every ``shredded``
-    source gains the flag under the highest-priority name (also in
-    Spark's footer schema, for schema-less reads)."""
+    source gains the flag under the highest-priority name."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    def logical(cols):
-        present = [tbl[c] for c in cols if c in tbl.column_names]
-        if not present:
-            return None
-        return present[0] if len(present) == 1 else pc.coalesce(*present)
-
-    subj = logical(subject_cols)
+    subj = _logical(tbl, subject_cols)
     if subj is None:
         hit = pa.repeat(False, tbl.num_rows)
     else:
@@ -730,22 +874,9 @@ def _tombstone(tbl, subjects, subject_cols, envelope_cols, flag_cols):
                 i, tbl.schema.field(i), pc.if_else(hit, pa.scalar(None, env.type), env)
             )
     if flag_cols:
-        cur = logical(flag_cols)
+        cur = _logical(tbl, flag_cols)
         flag = hit if cur is None else pc.or_(pc.fill_null(cur, False), hit)
-        target = flag_cols[0]
-        if target in tbl.column_names:
-            i = tbl.schema.get_field_index(target)
-            tbl = tbl.set_column(i, tbl.schema.field(i), flag)
-        else:
-            tbl = tbl.append_column(pa.field(target, pa.bool_()), flag)
-            meta = dict(tbl.schema.metadata or {})
-            if _SPARK_ROW_METADATA in meta:
-                doc = json.loads(meta[_SPARK_ROW_METADATA])
-                doc["fields"].append(
-                    {"name": target, "type": "boolean", "nullable": True, "metadata": {}}
-                )
-                meta[_SPARK_ROW_METADATA] = json.dumps(doc).encode()
-                tbl = tbl.replace_schema_metadata(meta)
+        tbl = _put_column(tbl, flag_cols[0], flag, "boolean")
     return tbl
 
 

@@ -246,13 +246,48 @@ def collect_data_files(
         return list(ex.map(one, rel_paths))
 
 
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def align_spark_schema(tbl, new_types: dict | None = None, schemas=()):
+    """Make Spark's footer schema JSON (when ``tbl`` carries one) list
+    exactly ``tbl``'s columns, in order, so a schema-less Spark read of
+    the output sees what the file holds. A column keeps its JSON entry
+    from ``tbl`` or from one of ``schemas`` (the Arrow schemas of
+    concatenated inputs); a column none of them knows gets the Spark
+    type name ``new_types[name]``, and without one the JSON is dropped
+    (Spark then maps the Parquet schema itself)."""
+    docs = [s.metadata.get(_SPARK_ROW_METADATA) for s in [tbl.schema, *schemas] if s.metadata]
+    docs = list(dict.fromkeys(d for d in docs if d))
+    if not docs:
+        return tbl
+    doc = json.loads(docs[0])
+    if len(docs) == 1 and [f["name"] for f in doc["fields"]] == tbl.column_names:
+        return tbl
+    known: dict = {}
+    for d in docs:
+        for f in json.loads(d)["fields"]:
+            known.setdefault(f["name"], f)
+    new_types = new_types or {}
+    meta = dict(tbl.schema.metadata)
+    if all(n in known or n in new_types for n in tbl.column_names):
+        doc["fields"] = [
+            known.get(n) or {"name": n, "type": new_types[n], "nullable": True, "metadata": {}}
+            for n in tbl.column_names
+        ]
+        meta[_SPARK_ROW_METADATA] = json.dumps(doc).encode()
+    else:
+        del meta[_SPARK_ROW_METADATA]
+    return tbl.replace_schema_metadata(meta)
+
+
 def rewrite_file_groups(
     root: str,
     groups: Sequence[tuple[str, Sequence[str]]],
     spark: SparkSession,
     stat_cols: Sequence[str],
     bloom_cols: Sequence[str] = DEFAULT_BLOOM_COLUMNS,
-    sort_col: str | None = None,
+    sort_col: str | Sequence[str] | None = None,
     transform: Callable | None = None,
 ) -> list[DataFile]:
     """Order-preserving distributed rewrite writer: one task per group,
@@ -262,10 +297,13 @@ def rewrite_file_groups(
 
     Two task shapes:
 
-    - ``sort_col`` set (the cluster() merge): the task reads its group
-      whole, concatenates and re-sorts on ``sort_col``. Task memory is
-      the decompressed size of one group, so size groups to the
-      compaction target (not more).
+    - ``sort_col`` set (the cluster() merge and one-task clustering):
+      the task reads its group whole, concatenates it (schemas unify by
+      name; missing columns read as NULL), runs ``transform`` once on
+      the concatenation, and sorts on ``sort_col`` (one name or a list;
+      names the table lacks are skipped). Task memory is the
+      decompressed size of one group, so size groups to the compaction
+      target (not more).
     - otherwise (the shred rewrite): the task streams the group's row
       groups one at a time through ``transform`` (``pa.Table ->
       pa.Table``) into one writer — row order kept, task memory bounded
@@ -287,7 +325,7 @@ def rewrite_file_groups(
     cols = list(stat_cols)
     bcols = list(bloom_cols)
     rootv = root
-    sortv = sort_col
+    sortv = [sort_col] if isinstance(sort_col, str) else list(sort_col or ())
 
     def work(item):
         out_rel, rels = item
@@ -302,14 +340,18 @@ def rewrite_file_groups(
                 for i in range(pf.num_row_groups):
                     yield pf.read_row_group(i)
 
-        stream = row_groups()
         if sortv:
-            tbl = pa.concat_tables(list(stream), promote_options="permissive")
-            if sortv in tbl.column_names:
-                tbl = tbl.sort_by(sortv)
-            stream = iter([tbl])
-        if transform is not None:
-            stream = map(transform, stream)
+            parts = list(row_groups())
+            tbl = pa.concat_tables(parts, promote_options="permissive")
+            tbl = align_spark_schema(tbl, schemas=[p.schema for p in parts])
+            if transform is not None:
+                tbl = transform(tbl)
+            keys = [(c, "ascending") for c in sortv if c in tbl.column_names]
+            stream = iter([tbl.sort_by(keys) if keys else tbl])
+        else:
+            stream = row_groups()
+            if transform is not None:
+                stream = map(transform, stream)
         out_abs = os.path.join(rootv, out_rel)
         tmp = out_abs + ".inprogress"
         first = next(stream)

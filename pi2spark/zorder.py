@@ -8,22 +8,22 @@ bit-interleaved Morton keys (with Hilbert-curve fallback) over
    sample-derived boundaries (same idea as Spark's RangePartitioner
    reservoir sampling): sample a bounded number of values per column
    (driver memory is O(sample), independent of table size), sort, take
-   equi-spaced quantile boundaries, broadcast, then map value→bucket
-   with vectorized ``np.searchsorted`` inside one Arrow-batched pandas
-   UDF for all columns at once. Order-preserving, so files clustered
-   on the key get tight per-column min/max ranges → stats pruning (B2)
-   becomes effective.
-2. **Interleave bits JVM-side**: the Morton key is a pure Spark column
-   expression built from ``shiftleft``/``shiftright``/``&``/``|`` over
-   the bucket ints — it stays inside whole-stage codegen; no Python in
-   the hot path after the bucket UDF.
-3. **Hilbert fallback**: Skilling's transpose algorithm vectorized in
-   numpy inside the same bucket UDF (Hilbert has better locality but
-   is not expressible in closed-form column ops; public-domain
+   equi-spaced quantile boundaries (``sample_bounds``), then map
+   value→bucket with vectorized ``np.searchsorted``. Order-preserving,
+   so files clustered on the key get tight per-column min/max ranges →
+   stats pruning (B2) becomes effective.
+2. **Index the bucket tuple** on the curve in numpy: Morton bit
+   interleave, or Hilbert via Skilling's transpose algorithm (better
+   locality, not expressible in closed-form column ops; public-domain
    algorithm, "Programming the Hilbert curve", AIP 2004).
 
-The key is then used with ``repartitionByRange(n, zkey, tiebreaker)``
-+ ``sortWithinPartitions(zkey)`` by the clustering pass.
+Both steps are one kernel, ``curve_keys``, over pandas Series. The
+Spark path calls it from one Arrow-batched pandas UDF
+(``make_curve_udf``) and the clustering pass range-partitions on the
+key; a clustering pass small enough for one output file calls it from
+its single pyarrow task instead (``maintenance.cluster``).
+``morton_interleave`` keeps the pure column-expression form for
+integer columns that never need bucketing.
 """
 
 from __future__ import annotations
@@ -59,24 +59,23 @@ def column_boundaries(
     the sample. Driver cost is O(columns × sample_rows) regardless of
     table size. Pass ``total_rows`` (e.g. from manifest stats) to avoid
     a count job."""
-    n_buckets = 1 << bits
     total = total_rows if total_rows is not None else df.count()
     frac = min(1.0, (sample_rows * 1.2) / max(total, 1))
     sample = df.select(*columns).sample(withReplacement=False, fraction=frac, seed=seed)
     pdf = sample.limit(sample_rows).toPandas()
-    out: dict[str, list] = {}
-    for c in columns:
-        vals = np.sort(pdf[c].dropna().to_numpy())
-        if len(vals) == 0:
-            out[c] = []
-            continue
-        # n_buckets-1 boundaries at equi-spaced quantile positions
-        k = min(n_buckets - 1, len(vals))
-        idx = np.linspace(0, len(vals) - 1, k + 2)[1:-1].astype(int)
-        bounds = vals[idx]
-        # dedupe while preserving order (heavy skew → few distinct bounds)
-        out[c] = list(pd.unique(bounds))
-    return out
+    return {c: sample_bounds(pdf[c], bits) for c in columns}
+
+
+def sample_bounds(values: pd.Series, bits: int = DEFAULT_BITS) -> list:
+    """One column's boundaries from sampled values: at most
+    ``2^bits - 1`` equi-spaced quantiles, deduplicated in order (heavy
+    skew → few distinct bounds). NULLs are ignored."""
+    vals = np.sort(values.dropna().to_numpy())
+    if len(vals) == 0:
+        return []
+    k = min((1 << bits) - 1, len(vals))
+    idx = np.linspace(0, len(vals) - 1, k + 2)[1:-1].astype(int)
+    return list(pd.unique(vals[idx]))
 
 
 _PROJ_CHARS = 8
@@ -297,39 +296,43 @@ def morton_interleave_np(coords: np.ndarray, bits: int) -> np.ndarray:
     return out
 
 
-def make_morton_udf(boundaries, columns, bits: int):
-    """All-in-one Morton key: bucket all columns + interleave inside a
+_CURVES = {"morton": morton_interleave_np, "hilbert": hilbert_index_np}
+
+
+def check_cluster_key(columns, bits: int, curve: str) -> None:
+    """Reject a curve or key width the kernel cannot honour, before any
+    job runs."""
+    if curve not in _CURVES:
+        raise ValueError(f"unknown curve {curve!r}")
+    _check_key_width(bits, len(columns))
+
+
+def curve_keys(boundaries: dict, cols, columns, bits: int, curve: str) -> np.ndarray:
+    """The cluster key kernel: bucket each column's values (pandas
+    Series, NULL bucketed as "") on its boundaries, then map the bucket
+    tuple onto the curve — int64 per row. The key UDF and the one-task
+    clustering rewrite both call it, so they key rows identically."""
+    coords = np.zeros((len(cols[0]), len(columns)), dtype=np.uint64)
+    for j, name in enumerate(columns):
+        bounds = np.asarray(boundaries[name], dtype=object)
+        vals = cols[j].fillna("").to_numpy(dtype=object)
+        coords[:, j] = _scaled_buckets(bounds, vals, bits).astype(np.uint64)
+    return _CURVES[curve](coords, bits).astype(np.int64)
+
+
+def make_curve_udf(boundaries, columns, bits: int, curve: str):
+    """All-in-one key UDF: bucket all columns and index the tuple in a
     single Arrow pass. One UDF invocation per batch (vs one per column
     + JVM interleave) — the strings must cross into Python for the
-    boundary search anyway, so a single transfer is strictly cheaper."""
+    boundary search anyway, so a single transfer is strictly cheaper.
+    ``boundaries`` may be a broadcast of the boundary dict."""
+    check_cluster_key(columns, bits, curve)
 
-    def _morton(*cols: pd.Series) -> pd.Series:
+    def _key(*cols: pd.Series) -> pd.Series:
         b = boundaries.value if hasattr(boundaries, "value") else boundaries
-        n = len(cols[0])
-        coords = np.zeros((n, len(columns)), dtype=np.uint64)
-        for j, name in enumerate(columns):
-            bounds = np.asarray(b[name], dtype=object)
-            vals = cols[j].fillna("").to_numpy(dtype=object)
-            coords[:, j] = _scaled_buckets(bounds, vals, bits).astype(np.uint64)
-        return pd.Series(morton_interleave_np(coords, bits).astype(np.int64))
+        return pd.Series(curve_keys(b, cols, columns, bits, curve))
 
-    return pandas_udf(T.LongType())(_morton)
-
-
-def make_hilbert_udf(boundaries, columns, bits: int):
-    """All-in-one: bucket each column then Hilbert-index the tuple."""
-
-    def _hilbert(*cols: pd.Series) -> pd.Series:
-        b = boundaries.value if hasattr(boundaries, "value") else boundaries
-        n = len(cols[0])
-        coords = np.zeros((n, len(columns)), dtype=np.uint64)
-        for j, name in enumerate(columns):
-            bounds = np.asarray(b[name], dtype=object)
-            vals = cols[j].fillna("").to_numpy(dtype=object)
-            coords[:, j] = _scaled_buckets(bounds, vals, bits).astype(np.uint64)
-        return pd.Series(hilbert_index_np(coords, bits).astype(np.int64))
-
-    return pandas_udf(T.LongType())(_hilbert)
+    return pandas_udf(T.LongType())(_key)
 
 
 # ---------------------------------------------------------------------------
@@ -351,22 +354,14 @@ def with_cluster_key(
     """Add the space-filling-curve cluster key column.
 
     Both curves run as ONE pandas UDF per batch (bucket lookup +
-    index computation together): the strings must reach Python for the
-    boundary searchsorted regardless, so a single Arrow transfer is
-    the cheapest shape. ``morton_interleave`` (the pure column-
-    expression form) remains available for integer columns that never
-    need bucketing."""
+    index computation together, ``curve_keys``): the strings must reach
+    Python for the boundary searchsorted regardless, so a single Arrow
+    transfer is the cheapest shape."""
     cols = list(columns)
-    _check_key_width(bits, len(cols))
+    check_cluster_key(cols, bits, curve)
     if boundaries is None:
         boundaries = column_boundaries(
             df, cols, bits=bits, sample_rows=sample_rows, total_rows=total_rows
         )
-    bc = broadcast if broadcast is not None else boundaries
-    if curve == "hilbert":
-        udf = make_hilbert_udf(bc, cols, bits)
-    elif curve == "morton":
-        udf = make_morton_udf(bc, cols, bits)
-    else:
-        raise ValueError(f"unknown curve {curve!r}")
+    udf = make_curve_udf(broadcast if broadcast is not None else boundaries, cols, bits, curve)
     return df.withColumn(key_col, udf(*[F.col(c) for c in cols]))

@@ -19,6 +19,7 @@
 import hashlib
 import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from pi2spark.crypto import broadcast_keys, decrypt_table, encrypt_table
@@ -284,13 +285,19 @@ def test_racing_compact_and_shred_both_commit(spark, tmp_path, monkeypatch):
     assert content_digest(scan) == expected
 
 
-def test_racing_cluster_and_shred_both_commit(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize(
+    "target_file_bytes, mode", [(1 << 20, "one-task"), (64 << 10, "shuffle")], ids=["one-task", "shuffle"]
+)
+def test_racing_cluster_and_shred_both_commit(spark, tmp_path, monkeypatch, target_file_bytes, mode):
     """cluster() joins the conflict re-planning protocol: a shred that
     wins the commit race while a full clustering is mid-flight rewrites
     the clustering's inputs; the clustering must re-plan from the fresh
     (post-shred) snapshot so both passes commit and the victim stays
-    tombstoned inside the re-clustered files."""
+    tombstoned inside the re-clustered files. Runs on both clustering
+    writers: one output file (one pyarrow task) and several (range
+    shuffle)."""
     import pi2spark.maintenance as M
+    from pi2spark.checkpoint import PassLedger
     from pi2spark.verify import content_digest
 
     plain = synthesize_source_files(spark, 500, seed=71, partitions=6, max_len=800).cache()
@@ -311,23 +318,24 @@ def test_racing_cluster_and_shred_both_commit(spark, tmp_path, monkeypatch):
     reg.forget(victim)
 
     # deterministic race: after the clustering attempt writes its
-    # output files (planned against the parent snapshot) but BEFORE it
-    # commits, the shred wins and rewrites some of its input files
-    orig_wf = Table.write_files
+    # output files (planned against the parent snapshot) and records
+    # its rewrite task, but BEFORE it commits, the shred wins and
+    # rewrites some of its input files
+    orig_rt = PassLedger.record_task
     state = {"fired": False}
 
-    def hooked(self, df, spark_, tag, stat_cols=None):
-        files = orig_wf(self, df, spark_, tag, stat_cols=stat_cols)
-        if tag.startswith("morton-race-cluster") and not state["fired"]:
+    def hooked(self, task_id, result, metrics=None):
+        orig_rt(self, task_id, result, metrics=metrics)
+        if self.pass_id == "race-cluster" and task_id == "rewrite" and not state["fired"]:
             state["fired"] = True
-            win = M.shred(self, spark_, [victim], pass_id="race-shred2")
+            win = M.shred(t, spark, [victim], pass_id="race-shred2")
             assert not win.skipped
-        return files
 
-    monkeypatch.setattr(Table, "write_files", hooked)
-    res = M.cluster(t, spark, pass_id="race-cluster", target_file_bytes=1 << 20)
+    monkeypatch.setattr(PassLedger, "record_task", hooked)
+    res = M.cluster(t, spark, pass_id="race-cluster", target_file_bytes=target_file_bytes)
     assert not res.skipped
     assert res.details["replans"] == 1
+    assert res.details["mode"] == mode
 
     ops = [s["operation"] for s in t.snapshots()]
     assert ops == ["append", "shred", "morton"]

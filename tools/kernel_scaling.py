@@ -50,14 +50,14 @@ def _morton_task(seed: int) -> float:
     import numpy as np
     import pandas as pd
 
-    from pi2spark.zorder import make_morton_udf
+    from pi2spark.zorder import make_curve_udf
 
     rng = np.random.default_rng(seed)
     n = ROWS_PER_TASK * 8
     cols = ["repo", "lang", "path"]
     bounds = {c: sorted({f"v{int(x):06d}" for x in rng.integers(0, 60000, 4000)}) for c in cols}
     data = [pd.Series([f"v{int(x):06d}" for x in rng.integers(0, 60000, n)]) for _ in cols]
-    fn = make_morton_udf(bounds, cols, bits=16).func
+    fn = make_curve_udf(bounds, cols, 16, "morton").func
     t0 = time.time()
     fn(*data)
     return n / (time.time() - t0)
