@@ -88,8 +88,7 @@ def main() -> None:
             ]
             with clock("enc.collect_stats"):
                 files = collect_data_files(
-                    tbl.root, rels, tbl.stats_columns(), spark=spark,
-                    bloom_cols=tbl.bloom_columns(),
+                    tbl.root, rels, tbl.stats_columns(), bloom_cols=tbl.bloom_columns(),
                 )
             with clock("enc.commit"):
                 tbl.commit("append", added=files)
@@ -160,8 +159,7 @@ def main() -> None:
             ]
             with clock("z.collect_stats"):
                 zfiles = collect_data_files(
-                    tbl.root, rels, tbl.stats_columns(), spark=spark,
-                    bloom_cols=tbl.bloom_columns(),
+                    tbl.root, rels, tbl.stats_columns(), bloom_cols=tbl.bloom_columns(),
                 )
             with clock("z.commit"):
                 tbl.commit_with_retry(

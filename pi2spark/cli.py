@@ -118,7 +118,6 @@ def main(argv=None) -> int:
     p.add_argument("--keep-last", type=int, default=1)
     p.add_argument("--rows", type=int, default=100_000, help="ingest: rows to synthesize")
     p.add_argument("--seed", type=int, default=42)
-    p.add_argument("--concurrency", type=int, default=8)
     p.add_argument("--incremental", action="store_true",
                    help="cluster: rewrite only files not yet clustered")
     p.add_argument("--older-than-hours", type=float, default=3.0,
@@ -226,8 +225,7 @@ def main(argv=None) -> int:
     elif args.command == "compact":
         from pi2spark.maintenance import compact
 
-        r = compact(t, spark, target_file_bytes=target,
-                    concurrency=args.concurrency, pass_id=args.pass_id)
+        r = compact(t, spark, target_file_bytes=target, pass_id=args.pass_id)
         out.update(r.__dict__ | {"details": r.details})
     elif args.command == "cluster":
         from pi2spark.maintenance import cluster
@@ -246,8 +244,7 @@ def main(argv=None) -> int:
             return 2
         for s in subjects:
             reg.forget(s)
-        r = shred(t, spark, subjects, target_file_bytes=target,
-                  concurrency=args.concurrency, pass_id=args.pass_id)
+        r = shred(t, spark, subjects, target_file_bytes=target, pass_id=args.pass_id)
         out.update(r.__dict__ | {"details": r.details})
     elif args.command == "rotate":
         from pi2spark.maintenance import rotate_many_and_reencrypt

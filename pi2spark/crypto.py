@@ -449,6 +449,7 @@ def encrypt_table(df: DataFrame, spec: ProtectionSpec, keys) -> DataFrame:
     are versioned."""
     if not spec.requires_encryption:
         return df.withColumn("shredded", F.lit(False))
+    flag = F.lit(False).alias("shredded")
     keyed = isinstance(keys, DataFrame)
     src = _join_keys(df, spec, keys) if keyed else df
     key_args = [F.col(_KEY_COL)] if keyed else []
@@ -466,8 +467,11 @@ def encrypt_table(df: DataFrame, spec: ProtectionSpec, keys) -> DataFrame:
                 )
             )
         else:
-            cols.append(F.col(name))
-    return src.select(*cols).withColumn("shredded", F.lit(False))
+            # an incoming flag (a decrypted frame) is reset in place
+            cols.append(flag if name == "shredded" else F.col(name))
+    # one projection: every extra DataFrame step is driver-side
+    # analysis paid on each append
+    return src.select(*cols, *([] if "shredded" in df.columns else [flag]))
 
 
 def decrypt_table(df: DataFrame, spec: ProtectionSpec, keys, strict: bool = False) -> DataFrame:
@@ -492,7 +496,6 @@ def decrypt_table(df: DataFrame, spec: ProtectionSpec, keys, strict: bool = Fals
     stored_flag = (
         F.coalesce(F.col("shredded"), F.lit(False)) if "shredded" in df.columns else F.lit(False)
     )
-    shredded_acc = stored_flag
     # Validate every envelope slot up front (exactly one per PII column,
     # struct-typed) — the reference's read-side format check
     # (OneOfPersonalDataFieldDefinition.java:98-106,135-158). Raises
@@ -502,26 +505,26 @@ def decrypt_table(df: DataFrame, spec: ProtectionSpec, keys, strict: bool = Fals
         name: find_envelope_field(df.schema, name, spec.envelope_suffix, spec.table_name)
         for name in spec.pii_columns
     }
-    original_order = [
-        env_cols[c] if c in spec.pii_columns else c for c in df.columns if c != "shredded"
-    ]
+    # two projections: the first runs every decrypt UDF once, the
+    # second reads each result's two fields
+    out = out.select(
+        "*",
+        *[
+            make_decrypt_udf(keys, strict=strict, binary=name in spec.binary_columns)(
+                F.col(env_cols[name]), *key_args
+            ).alias(f"__dec_{name}")
+            for name in spec.pii_columns
+        ],
+    )
+    shredded = stored_flag
+    plain = {}
     for name in spec.pii_columns:
-        env_col = env_cols[name]
-        binary = name in spec.binary_columns
-        res = f"__dec_{name}"
-        dec = make_decrypt_udf(keys, strict=strict, binary=binary)
-        out = out.withColumn(res, dec(F.col(env_col), *key_args))
-        out = out.withColumn(
-            name,
-            F.when(
-                stored_flag, F.lit(None).cast("binary" if binary else "string")
-            ).otherwise(F.col(f"{res}.content")),
-        )
-        shredded_acc = shredded_acc | F.coalesce(F.col(f"{res}.shredded"), F.lit(False))
-        out = out.withColumn("__shred_acc", shredded_acc)
-        shredded_acc = F.col("__shred_acc")
-        out = out.drop(env_col, res)
-    # map envelope column names back to plaintext names, preserving order
+        null = F.lit(None).cast("binary" if name in spec.binary_columns else "string")
+        plain[name] = F.when(stored_flag, null).otherwise(F.col(f"__dec_{name}.content")).alias(name)
+        shredded = shredded | F.coalesce(F.col(f"__dec_{name}.shredded"), F.lit(False))
+    # envelope columns back to plaintext names, preserving order
     env_to_plain = {env_cols[c]: c for c in spec.pii_columns}
-    restored = [env_to_plain.get(name, name) for name in original_order]
-    return out.select(*restored, F.col("__shred_acc").alias("shredded"))
+    restored = [
+        env_to_plain.get(env_cols.get(c, c), c) for c in df.columns if c != "shredded"
+    ]
+    return out.select(*[plain.get(c, c) for c in restored], shredded.alias("shredded"))

@@ -85,7 +85,7 @@ from pyspark.sql.types import StructType
 from pi2spark.errors import Pi2SparkError
 
 if TYPE_CHECKING:  # pragma: no cover
-    from pi2spark.table import ColumnPredicate, Table
+    from pi2spark.table import ColumnPredicate, DataFile, Table
 
 DEFAULT_PARTITION_BYTES = 128 * 1024 * 1024
 
@@ -496,23 +496,21 @@ class Pi2SparkStreamReader(DataSourceStreamReader):
 
 @dataclass
 class _WrittenFile(WriterCommitMessage):
-    """One task's output: a staged data file + its manifest entry
-    fields (stats computed in-task — no read-back pass)."""
+    """One task's output: its staged data file's manifest entry (stats
+    computed in-task — no read-back pass), or None when the task saw no
+    rows."""
 
-    rel_path: str | None  # None: the task saw no rows
-    rows: int = 0
-    bytes: int = 0
-    stats_json: str = "{}"
-    blooms_json: str = "{}"
-    nulls_json: str = "{}"
+    file: DataFile | None
 
 
 class _ArrowFileWriter:
     """Shared executor-side write half of the batch and streaming
     writers: each task streams its Arrow batches into ONE parquet file
     under a staged pass directory (writer-unique uuid names — two
-    racing writers can never collide) and computes the file's min/max
-    stats + subject blooms in the same task. Nothing is visible to
+    racing writers can never collide) through ``table.write_data_file``,
+    the writer every write path shares, which also computes the file's
+    min/max stats + subject blooms in the same task and writes the
+    incoming schema as Spark's footer schema. Nothing is visible to
     readers until the driver-side ``commit`` links the staged files
     into a snapshot; ``abort`` just deletes them. This is the same
     two-phase write every table-format sink uses (Iceberg's
@@ -523,47 +521,31 @@ class _ArrowFileWriter:
     file sizing is controlled by the caller's partitioning, exactly
     like ``Table.write_files``."""
 
-    def __init__(self, root: str, rel_dir: str, stat_cols, bloom_cols):
+    def __init__(self, root: str, rel_dir: str, stat_cols, bloom_cols, schema: StructType):
         self._root = root
         self._rel_dir = rel_dir
         self._stat_cols = tuple(stat_cols)
         self._bloom_cols = tuple(bloom_cols)
+        self._spark_schema = schema
 
     def write(self, iterator) -> _WrittenFile:
         import uuid
 
-        import pyarrow.parquet as pq
+        from pi2spark.table import write_data_file
 
-        from pi2spark.table import _footer_stats
-
-        writer = None
         rel = os.path.join(self._rel_dir, f"ds-{uuid.uuid4().hex[:16]}.parquet")
-        out_abs = os.path.join(self._root, rel)
-        tmp = out_abs + ".inprogress"
-        for batch in iterator:
-            if batch.num_rows == 0:
-                continue
-            if writer is None:
-                writer = pq.ParquetWriter(tmp, batch.schema, compression="snappy")
-            writer.write_batch(batch)
-        if writer is None:
-            return _WrittenFile(rel_path=None)
-        writer.close()
-        os.rename(tmp, out_abs)
-        rows, size, stats, blooms, nulls = _footer_stats(
-            out_abs, self._stat_cols, self._bloom_cols
-        )
         return _WrittenFile(
-            rel, rows, size, json.dumps(stats), json.dumps(blooms), json.dumps(nulls)
+            write_data_file(
+                self._root, rel, iterator, self._stat_cols, self._bloom_cols, self._spark_schema
+            )
         )
 
     def delete_staged(self, messages) -> None:
-        for m in messages or ():
-            if m is not None and m.rel_path:
-                try:
-                    os.remove(os.path.join(self._root, m.rel_path))
-                except OSError:
-                    pass
+        for f in _datafiles_from_messages(messages):
+            try:
+                os.remove(os.path.join(self._root, f.path))
+            except OSError:
+                pass
 
 
 def _writer_guard(table: "Table", options, schema: StructType) -> None:
@@ -594,20 +576,7 @@ def _writer_guard(table: "Table", options, schema: StructType) -> None:
 
 
 def _datafiles_from_messages(messages) -> list:
-    from pi2spark.table import DataFile
-
-    return [
-        DataFile(
-            path=m.rel_path,
-            rows=m.rows,
-            bytes=m.bytes,
-            stats=json.loads(m.stats_json),
-            blooms=json.loads(m.blooms_json),
-            nulls=json.loads(getattr(m, "nulls_json", "{}")),
-        )
-        for m in messages or ()
-        if m is not None and m.rel_path
-    ]
+    return [m.file for m in messages or () if m is not None and m.file is not None]
 
 
 class Pi2SparkBatchWriter(DataSourceArrowWriter):
@@ -626,7 +595,7 @@ class Pi2SparkBatchWriter(DataSourceArrowWriter):
         self._schema_json = schema.json()
         rel_dir, _ = table.new_data_dir("dswrite")
         self._files = _ArrowFileWriter(
-            table.root, rel_dir, table.stats_columns(), table.bloom_columns()
+            table.root, rel_dir, table.stats_columns(), table.bloom_columns(), schema
         )
 
     def write(self, iterator):
@@ -701,7 +670,7 @@ class Pi2SparkStreamWriter(DataSourceStreamArrowWriter):
         self._checkpoint = options.get("checkpointlocation") or ""
         rel_dir, _ = table.new_data_dir("dsstream")
         self._files = _ArrowFileWriter(
-            table.root, rel_dir, table.stats_columns(), table.bloom_columns()
+            table.root, rel_dir, table.stats_columns(), table.bloom_columns(), schema
         )
 
     def _qkey(self) -> str:

@@ -5,30 +5,32 @@ Execution model
 ---------------
 Every rewrite pass runs in **waves** through one driver
 (``_rewrite_files_in_waves``): one shuffle-free Spark job per wave,
-one ledger task per wave, with one of two writers.
+one ledger task per wave, with one of two planners feeding ONE file
+writer (``table.write_data_file``: each task writes its file and
+returns its manifest entry — footer stats + bloom — so no pass reads
+stats back).
 
-- **Spark scan-and-write** (compact, delete/update, merge_into,
+- **Spark scan planning** (compact, delete/update, merge_into,
   reencrypt): one scan over all of the wave's files, with **Spark's
   own scan packing doing the bin planning** —
   ``spark.sql.files.maxPartitionBytes`` is set to the target file size
   (and ``openCostInBytes`` to 0) for the duration of the job, so the
   FileSourceScan packs small files into ~target-size partitions
   (greedy by size, the same first-fit idea as Iceberg's binpack) and
-  the writer emits exactly one ~target-size file per partition. An
-  oversized input splits across partitions (parquet is splittable)
-  and simply yields several right-sized outputs. Ciphertext moves
-  opaquely (crypto is NOT re-run — the envelope column is just bytes
-  to these passes).
-- **Arrow group writer** (shred; the cluster merge path; a cluster
-  whose input makes one output file): one pyarrow task per output
-  file, which writes it and returns its manifest entry (footer stats +
-  bloom) — no SQL plan and no stats read-back. Shred rewrites each
-  affected file 1:1 (same rows, same order, same zkey range),
-  streaming its row groups through the tombstone; the merge packs
-  consecutive zkey-ordered files and re-sorts them; the one-file
-  cluster keys its concatenated inputs and sorts them.
+  ``Table.write_files`` emits exactly one ~target-size file per
+  partition. An oversized input splits across partitions (parquet is
+  splittable) and simply yields several right-sized outputs.
+  Ciphertext moves opaquely (crypto is NOT re-run — the envelope
+  column is just bytes to these passes).
+- **Consecutive pyarrow groups** (shred; the cluster merge path; a
+  cluster whose input makes one output file): one pyarrow task per
+  output file (``rewrite_file_groups``), with no SQL plan. Shred
+  rewrites each affected file 1:1 (same rows, same order, same zkey
+  range), streaming its row groups through the tombstone; the merge
+  packs consecutive zkey-ordered files and re-sorts them; the
+  one-file cluster keys its concatenated inputs and sorts them.
 
-The Spark writer's shape is the third iteration, chosen by
+The Spark planner's shape is the third iteration, chosen by
 measurement: round 2 ran one Spark job per bin from a driver thread
 pool (fixed ~0.3 s/job driver cost → parallelism-independent floor,
 2→8-core efficiency 0.37); a union-of-coalesced-branches wave fixed
@@ -78,7 +80,7 @@ from pi2spark.table import (
     DataFile,
     Table,
     align_spark_schema,
-    collect_data_files,
+    collect_data_files,  # noqa: F401 — importable here by name for tracing callers
     pack_consecutive,
     rewrite_file_groups,
 )
@@ -92,7 +94,6 @@ from pi2spark.zorder import (
 )
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
-DEFAULT_CONCURRENCY = 8  # legacy knob, kept for CLI compat (wave mode ignores it)
 DEFAULT_WAVE_FILES = 10_000  # input files per rewrite wave (one Spark job each)
 
 
@@ -163,23 +164,23 @@ def _rewrite_files_in_waves(
     task_name: str = "wave-",
 ) -> list[dict]:
     """Rewrite data files in waves of at most ``wave_files`` inputs, one
-    shuffle-free Spark job per wave, with one of two writers (see
-    module docstring):
+    shuffle-free Spark job per wave, with one of two planners (see
+    module docstring); either way each write task returns its output's
+    stats:
 
-    - Spark (default): one scan over the wave's files, packed into
-      ~``target_bytes`` partitions (maxPartitionBytes = target,
-      openCost = 0); the optional ``transform`` (DataFrame ->
-      DataFrame, over the logical schema) and the per-partition
-      ``sort_col`` sort are narrow, and the writer emits one file per
-      partition. Output stats come from a read-back sweep
-      (``collect_data_files``).
+    - Spark (default): one scan over the wave's files under the logical
+      schema, packed into ~``target_bytes`` partitions
+      (maxPartitionBytes = target, openCost = 0); the optional
+      ``transform`` (DataFrame -> DataFrame, over the logical schema)
+      and the per-partition ``sort_col`` sort are narrow, and
+      ``Table.write_files`` writes one file per non-empty partition and
+      persists the logical schema, so rewritten files migrate to it.
     - ``arrow=True``: the order-preserving group writer
       (``rewrite_file_groups``), one Python task per output file.
       Files pack consecutively up to ``target_bytes`` and re-sort on
       ``sort_col`` (the cluster merge), or, with ``target_bytes=None``,
       each file is its own group streamed through ``transform``
-      (``pa.Table -> pa.Table`` per row group — the 1:1 shred). The
-      write tasks return the output stats.
+      (``pa.Table -> pa.Table`` per row group — the 1:1 shred).
 
     Resume granularity is the wave: the ledger records one task per
     wave (``<task_prefix><task_name><wave:05d>``) with the wave's
@@ -209,8 +210,8 @@ def _rewrite_files_in_waves(
             continue
         s = time.time()
         inputs = [f for g in wave for f in g]
-        rel_dir, abs_dir = table.new_data_dir(f"{tag}-w{w:05d}")
         if arrow:
+            rel_dir, _ = table.new_data_dir(f"{tag}-w{w:05d}")
             added = rewrite_file_groups(
                 table.root,
                 [
@@ -224,14 +225,12 @@ def _rewrite_files_in_waves(
                 transform=transform,
             )
         else:
-            schema = table.data_schema()
-            reader = packer.read.schema(schema) if schema is not None else packer.read
             # upgrade to the logical schema (no-op without evolution
             # ops): transforms reference logical names, and rewritten
             # files thereby migrate to the current schema — Iceberg's
             # rewrite behavior
             df = table.apply_schema_ops(
-                reader.parquet(*[os.path.join(table.root, f.path) for f in inputs])
+                table.reader(packer).parquet(*[os.path.join(table.root, f.path) for f in inputs])
             )
             if transform is not None:
                 df = transform(df)
@@ -240,15 +239,7 @@ def _rewrite_files_in_waves(
                 # pack concatenates sorted inputs; one in-memory sort
                 # per ~target-size partition re-merges them)
                 df = df.sortWithinPartitions(sort_col)
-            df.write.mode("overwrite").parquet(abs_dir)
-            rels = [
-                os.path.join(rel_dir, n)
-                for n in sorted(os.listdir(abs_dir))
-                if n.endswith(".parquet")
-            ]
-            added = collect_data_files(
-                table.root, rels, stat_cols, spark=spark, bloom_cols=bloom_cols
-            )
+            added = table.write_files(df, packer, tag=f"{tag}-w{w:05d}", stat_cols=stat_cols)
         result = {
             "inputs": [f.path for f in inputs],
             "outputs": [a.to_json() for a in added],
@@ -335,7 +326,7 @@ def compact(
     table: Table,
     spark: SparkSession,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    concurrency: int = DEFAULT_CONCURRENCY,  # noqa: ARG001 — legacy, wave mode
+    concurrency: int | None = None,  # noqa: ARG001 — ignored; accepted for old callers
     pass_id: str | None = None,
     wave_files: int = DEFAULT_WAVE_FILES,
     small_ratio: float = 0.75,
@@ -682,7 +673,7 @@ def _cluster_with_shuffle(
     """Cluster ``in_files`` into ``n_files`` outputs through one range
     shuffle: boundaries (manifest stats, else a sample job), the key
     UDF, ``repartitionByRange(n_files, zkey, tiebreak)``, a sort within
-    each partition, ``Table.write_files`` and its stats read-back."""
+    each partition and ``Table.write_files``."""
     df = table.apply_schema_ops(
         table.reader(spark).parquet(*[os.path.join(table.root, f.path) for f in in_files])
     )
@@ -886,7 +877,7 @@ def shred(
     subjects,
     subject_column: str = "repo",
     envelope_columns=("content_enc",),
-    concurrency: int = DEFAULT_CONCURRENCY,  # noqa: ARG001 — legacy, wave mode
+    concurrency: int | None = None,  # noqa: ARG001 — ignored; accepted for old callers
     pass_id: str | None = None,
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,  # noqa: ARG001 — rewrite is 1:1
     wave_files: int = DEFAULT_WAVE_FILES,
@@ -1204,12 +1195,13 @@ def merge_into(
                 tgt_schema = table.scan(spark).limit(0).schema
             else:
                 tgt_schema = source.schema
-            sel = []
-            for fld in tgt_schema:
-                if fld.name in inserts_src.columns:
-                    sel.append(F.col(fld.name).cast(fld.dataType).alias(fld.name))
-                else:
-                    sel.append(F.lit(None).cast(fld.dataType).alias(fld.name))
+            # keep field metadata: the envelope marker must reach the footer
+            sel = [
+                (F.col(fld.name) if fld.name in inserts_src.columns else F.lit(None))
+                .cast(fld.dataType)
+                .alias(fld.name, metadata=fld.metadata)
+                for fld in tgt_schema
+            ]
             # output sizing from the table's own bytes/row (source row
             # width is unknown until written); bounded either way
             if tgt_files:
@@ -1217,18 +1209,12 @@ def merge_into(
             else:
                 bpr = 256.0
             n_ins = max(1, min(64, int(n_src * bpr / target_file_bytes) + 1))
-            ins_added = table.write_files(
+            # an all-matched source leaves every partition empty: no file
+            added = added + table.write_files(
                 inserts_src.select(*sel).repartition(n_ins),
                 spark,
                 tag=f"merge-{pass_id}-{prefix}ins",
             )
-            for a in ins_added:  # an all-matched source → empty outputs
-                if a.rows == 0:
-                    try:
-                        os.remove(os.path.join(table.root, a.path))
-                    except OSError:
-                        pass
-            added = added + [a for a in ins_added if a.rows > 0]
 
         def finish(new_snap):
             ledger.record_commit(new_snap.snapshot_id)
@@ -1365,8 +1351,8 @@ def delete_where(
         file-granularity delete, the 100 TB fast path for partition-
         aligned deletes;
       * rewrite — the boundary files, rewritten in scan-packed waves
-        keeping only non-matching rows; outputs that come back empty
-        are discarded rather than committed as 0-row files.
+        keeping only non-matching rows; a packed partition left with
+        no rows writes no file.
 
     Conflict re-planning and ledger resume are the shared rewrite
     protocol (``_run_with_replans``); like the other passes, the
@@ -1416,19 +1402,8 @@ def delete_where(
                 task_prefix=prefix,
             )
             removed += [p for r in results for p in r["inputs"]]
-            outs = [DataFile.from_json(d) for r in results for d in r["outputs"]]
-            # a file whose rows all matched writes back empty (or as a
-            # 0-row parquet shell) — drop shells from the commit; the
-            # physical files are removed best-effort, orphan sweep
-            # reclaims any survivor
-            for a in outs:
-                if a.rows == 0:
-                    try:
-                        os.remove(os.path.join(table.root, a.path))
-                    except OSError:
-                        pass
-                else:
-                    added.append(a)
+            # a partition whose rows all matched writes no file
+            added = [DataFile.from_json(d) for r in results for d in r["outputs"]]
 
         def finish(new_snap):
             ledger.record_commit(new_snap.snapshot_id)
@@ -1642,17 +1617,18 @@ def reencrypt(
     udf = make_reencrypt_udf(keys_versioned, subjects)
 
     def reseal(df: DataFrame) -> DataFrame:
-        out = df
-        for env in envelope_columns:
-            if env in df.columns:
-                # NULL envelopes (shredded rows) stay NULL structs
-                out = out.withColumn(
-                    env,
-                    F.when(F.col(env).isNull(), F.lit(None).cast(df.schema[env].dataType)).otherwise(
-                        udf(F.col(env))
-                    ),
-                )
-        return out.select(*df.columns)
+        # NULL envelopes (shredded rows) stay NULL structs; the field
+        # metadata (the envelope marker) stays on the column
+        return df.select(
+            *[
+                F.when(F.col(c).isNull(), F.lit(None).cast(f.dataType))
+                .otherwise(udf(F.col(c)))
+                .alias(c, metadata=f.metadata)
+                if c in envelope_columns
+                else F.col(c)
+                for c, f in zip(df.columns, df.schema.fields)
+            ]
+        )
 
     def _attempt(attempt: int, prefix: str):
         snap = table.snapshot()

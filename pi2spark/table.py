@@ -27,9 +27,9 @@ Semantics (SURVEY.md §2 B1/B2/B5/B6):
   *before* Catalyst ever sees them. (Catalyst then does row-group and
   page-level pruning inside the files it is given — both layers apply.)
 - **Stats** (B5): collected from Parquet footers (row-group statistics
-  via pyarrow). Footer reads are distributed over executors via
-  ``sc.parallelize(paths).mapPartitions`` when the file count is large
-  — at 10^12-file ambition the driver must never touch every footer.
+  via pyarrow) by the task that wrote the file (``write_data_file``),
+  so the driver never touches a footer — at 10^12-file ambition it
+  must not.
 - **Manifest rewrite** (B6): commits record added/removed files and the
   parent snapshot; removed files stay on disk for time travel until
   reference-counted snapshot expiry deletes them (``maintenance.expire``).
@@ -48,6 +48,7 @@ shards (shared across snapshots) as well as data files. Format v1
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -194,53 +195,17 @@ def collect_data_files(
     root: str,
     rel_paths: Sequence[str],
     stat_cols: Sequence[str],
-    spark: SparkSession | None = None,
-    distribute_threshold: int = 64,
     bloom_cols: Sequence[str] = DEFAULT_BLOOM_COLUMNS,
 ) -> list[DataFile]:
-    """Build DataFile entries (footer stats + subject blooms) for the
-    given files.
-
-    Distributed over executors for large file counts (shared-storage
-    assumption, same as any object-store lakehouse); driver threads
-    otherwise."""
-    if spark is not None and len(rel_paths) >= distribute_threshold:
-        sc = spark.sparkContext
-        cols = list(stat_cols)
-        bcols = list(bloom_cols)
-        rootv = root
-
-        def part(paths):
-            for p in paths:
-                rows, size, stats, blooms, nulls = _footer_stats(
-                    os.path.join(rootv, p), cols, bcols
-                )
-                yield (p, rows, size, json.dumps(stats), json.dumps(blooms), json.dumps(nulls))
-
-        # ≥8 files per task bounds scheduler overhead; the ceiling lets
-        # a 64-file post-compact stats sweep still use every core
-        # (1 slice here serialized the whole sweep — measured ~2 s of
-        # parallelism-independent cost in every maintenance pass)
-        n_slices = max(1, min(len(rel_paths) // 8, sc.defaultParallelism * 4))
-        results = (
-            sc.parallelize(list(rel_paths), n_slices)
-            .mapPartitions(part)
-            .collect()
-        )
-        return [
-            DataFile(
-                path=p, rows=r, bytes=b,
-                stats=json.loads(s), blooms=json.loads(bl), nulls=json.loads(nl),
-            )
-            for p, r, b, s, bl, nl in results
-        ]
+    """Build DataFile entries (footer stats + subject blooms) for files
+    written outside this package's writers (e.g. by Spark's own
+    ``df.write``) before ``Table.commit`` registers them, on driver
+    threads. Every write path here returns its entries from the writing
+    task instead (``write_data_file``)."""
     from concurrent.futures import ThreadPoolExecutor
 
     def one(p: str) -> DataFile:
-        rows, size, stats, blooms, nulls = _footer_stats(
-            os.path.join(root, p), stat_cols, bloom_cols
-        )
-        return DataFile(path=p, rows=rows, bytes=size, stats=stats, blooms=blooms, nulls=nulls)
+        return DataFile(p, *_footer_stats(os.path.join(root, p), stat_cols, bloom_cols))
 
     with ThreadPoolExecutor(max_workers=16) as ex:
         return list(ex.map(one, rel_paths))
@@ -281,6 +246,92 @@ def align_spark_schema(tbl, new_types: dict | None = None, schemas=()):
     return tbl.replace_schema_metadata(meta)
 
 
+def write_data_file(
+    root: str,
+    rel_path: str,
+    batches: Iterable,
+    stat_cols: Sequence[str],
+    bloom_cols: Sequence[str] = DEFAULT_BLOOM_COLUMNS,
+    spark_schema=None,
+) -> DataFile | None:
+    """The one data-file writer every write path ends in: stream Arrow
+    batches (record batches or tables, one schema) into ONE Parquet file
+    at ``rel_path`` and return its manifest entry (``_footer_stats``:
+    footer min/max, null counts, subject bloom), all in the calling
+    task. Returns None, writing nothing, when every batch is empty.
+
+    - The file is written as ``<path>.inprogress`` and renamed into
+      place when complete; a writer that dies leaves only the staged
+      name, an uncommitted orphan ``remove_orphans`` reclaims.
+    - Every column is written nullable (Spark 4.1's own writer keeps a
+      non-nullable column required): a later Arrow rewrite may NULL it
+      (the shred tombstone), and pyarrow silently misplaces NULLs
+      written into a required column.
+    - Snappy compression; dictionary encoding for flat non-floating
+      columns only; timestamps as INT64 microseconds (pyarrow's
+      nanosecond default is a type Spark cannot read).
+    - ``spark_schema`` (the batches' ``StructType``) becomes Spark's
+      footer schema, so a schema-less Spark read restores Spark's types
+      and field metadata (the envelope marker); without it the first
+      batch's schema metadata is written as is.
+    - One row group per non-empty batch: a Spark-planned write gets
+      batches of ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows
+      (10,000 in ``get_spark``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    out_abs = os.path.join(root, rel_path)
+    tmp = out_abs + ".inprogress"
+    writer = None
+    try:
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            if writer is None:
+                meta = dict(b.schema.metadata or {})
+                if spark_schema is not None:
+                    meta[_SPARK_ROW_METADATA] = T.StructType(
+                        [T.StructField(f.name, f.dataType, True, f.metadata) for f in spark_schema]
+                    ).json()
+                schema = pa.schema([f.with_nullable(True) for f in b.schema], metadata=meta)
+                # dictionary pages only for flat, non-floating columns:
+                # ciphertext and embedding floats rarely repeat, and
+                # pyarrow, unlike Spark's writer, keeps a dictionary that
+                # does not shrink a column (embeddings grew 45% with one)
+                flat = [
+                    f.name
+                    for f in schema
+                    if not (pa.types.is_nested(f.type) or pa.types.is_floating(f.type))
+                ]
+                writer = pq.ParquetWriter(
+                    tmp, schema, compression="snappy", coerce_timestamps="us", use_dictionary=flat
+                )
+            writer.write(b if b.schema.equals(schema) else b.cast(schema))
+    finally:
+        if writer is not None:
+            writer.close()
+    if writer is None:
+        return None
+    os.rename(tmp, out_abs)
+    return DataFile(rel_path, *_footer_stats(out_abs, stat_cols, bloom_cols))
+
+
+def _write_partition(batches, root, rel_dir, stat_cols, bloom_cols, spark_schema):
+    """``mapInArrow`` body of ``Table.write_files``: one task's batches
+    into one file named for its partition plus a fresh uuid (unique per
+    task attempt), yielding its manifest entry as one JSON row."""
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    name = f"part-{TaskContext.get().partitionId():05d}-{uuid.uuid4().hex[:16]}.parquet"
+    f = write_data_file(
+        root, os.path.join(rel_dir, name), batches, stat_cols, bloom_cols, spark_schema
+    )
+    if f is not None:
+        yield pa.RecordBatch.from_pydict({"entry": [json.dumps(f.to_json())]})
+
+
 def rewrite_file_groups(
     root: str,
     groups: Sequence[tuple[str, Sequence[str]]],
@@ -290,10 +341,12 @@ def rewrite_file_groups(
     sort_col: str | Sequence[str] | None = None,
     transform: Callable | None = None,
 ) -> list[DataFile]:
-    """Order-preserving distributed rewrite writer: one task per group,
-    each task pyarrow-reads its (consecutive) input files, writes ONE
-    output file, and computes its stats + blooms in the same task — a
-    single shuffle-free Spark job with no read-back pass for stats.
+    """Order-preserving group writer, the pyarrow planner beside
+    ``Table.write_files``'s Spark-planned one: one task per group, each
+    task pyarrow-reads its (consecutive) input files and writes ONE
+    output file through ``write_data_file``, which returns its stats +
+    blooms from the same task — a single shuffle-free Spark job with no
+    read-back pass for stats.
 
     Two task shapes:
 
@@ -316,10 +369,10 @@ def rewrite_file_groups(
     disjoint. The data plane is pyarrow C++ in the Python worker —
     rows never cross into the JVM; only the manifest entries return.
 
-    Timestamps: Spark writes INT96, which pyarrow would read as
-    nanoseconds (overflowing outside 1677–2262) and write back as
-    INT64 nanoseconds, a type Spark cannot read. Inputs are read at
-    microseconds and outputs written as INT64 microseconds.
+    Timestamps: files of older versions carry Spark's INT96, which
+    pyarrow would read as nanoseconds (overflowing outside 1677–2262);
+    inputs are read at microseconds. A group whose rows are all gone
+    writes no file (the output list is then shorter than ``groups``).
 
     ``groups`` is ``[(out_rel_path, [in_rel_paths...]), ...]``."""
     cols = list(stat_cols)
@@ -347,33 +400,16 @@ def rewrite_file_groups(
             if transform is not None:
                 tbl = transform(tbl)
             keys = [(c, "ascending") for c in sortv if c in tbl.column_names]
-            stream = iter([tbl.sort_by(keys) if keys else tbl])
+            stream = [tbl.sort_by(keys) if keys else tbl]
         else:
             stream = row_groups()
             if transform is not None:
                 stream = map(transform, stream)
-        out_abs = os.path.join(rootv, out_rel)
-        tmp = out_abs + ".inprogress"
-        first = next(stream)
-        with pq.ParquetWriter(
-            tmp, first.schema, compression="snappy", coerce_timestamps="us"
-        ) as writer:
-            writer.write_table(first)
-            for tbl in stream:
-                writer.write_table(tbl)
-        os.rename(tmp, out_abs)
-        rows, size, stats, blooms, nulls = _footer_stats(out_abs, cols, bcols)
-        return (out_rel, rows, size, json.dumps(stats), json.dumps(blooms), json.dumps(nulls))
+        return write_data_file(rootv, out_rel, stream, cols, bcols)
 
     sc = spark.sparkContext
     results = sc.parallelize(list(groups), len(groups)).map(work).collect()
-    return [
-        DataFile(
-            path=p, rows=r, bytes=b,
-            stats=json.loads(s), blooms=json.loads(bl), nulls=json.loads(nl),
-        )
-        for p, r, b, s, bl, nl in results
-    ]
+    return [f for f in results if f is not None]
 
 
 def pack_consecutive(files: Sequence["DataFile"], target_bytes: int) -> list[list["DataFile"]]:
@@ -1582,21 +1618,32 @@ class Table:
         stat_cols: Sequence[str] | None = None,
     ) -> list[DataFile]:
         """Write a DataFrame as data files under a fresh pass directory
-        and return manifest entries with footer stats. One output file
-        per Spark partition — callers control file sizing via
-        repartition/coalesce before calling."""
+        and return their manifest entries, in one Spark job: each task
+        streams its partition's Arrow batches (``mapInArrow``) through
+        ``write_data_file`` and returns one manifest row — no Hadoop
+        commit protocol, no directory listing, no stats read-back.
+
+        One output file per NON-EMPTY partition, so callers control file
+        sizing via their partitioning (scan packing, repartition,
+        coalesce); an empty frame writes no file. ``df.schema`` is
+        persisted (``_persist_schema``) before the job and written as
+        every file's Spark footer schema. File names are unique per task
+        attempt: the output of a failed or retried attempt is never in
+        the returned entries, and stays on disk as an uncommitted orphan
+        until ``maintenance.remove_orphans`` reclaims it. ``spark`` is
+        unused (the frame carries its session)."""
         self._persist_schema(df.schema)
-        rel_dir, abs_dir = self.new_data_dir(tag)
-        df.write.mode("append").parquet(abs_dir)
-        rels = [
-            os.path.join(rel_dir, name)
-            for name in sorted(os.listdir(abs_dir))
-            if name.endswith(".parquet")
-        ]
-        cols = list(stat_cols if stat_cols is not None else self.stats_columns())
-        return collect_data_files(
-            self.root, rels, cols, spark=spark, bloom_cols=self.bloom_columns()
+        rel_dir, _ = self.new_data_dir(tag)
+        sink = functools.partial(
+            _write_partition,
+            root=self.root,
+            rel_dir=rel_dir,
+            stat_cols=list(stat_cols if stat_cols is not None else self.stats_columns()),
+            bloom_cols=self.bloom_columns(),
+            spark_schema=df.schema,
         )
+        rows = df.mapInArrow(sink, "entry string").collect()
+        return sorted((DataFile.from_json(json.loads(r.entry)) for r in rows), key=lambda f: f.path)
 
     def append(
         self,

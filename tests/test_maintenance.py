@@ -166,21 +166,22 @@ def test_compaction_resume_after_partial_failure(spark, loaded, monkeypatch):
     (FIXTURES.md §4 case 7). wave_files=4 forces multiple waves at
     this file count (resume granularity is the wave)."""
     t, reg, keys, baseline = loaded
-    import pi2spark.maintenance as M
+    from pi2spark.checkpoint import PassLedger
 
+    # crash while recording wave 2: its outputs exist, nothing committed
     calls = {"n": 0}
-    orig = M.collect_data_files
+    orig = PassLedger.record_task
 
-    def flaky(*a, **kw):
+    def flaky(self, *a, **kw):
         calls["n"] += 1
         if calls["n"] == 2:
             raise RuntimeError("simulated crash mid-pass")
-        return orig(*a, **kw)
+        return orig(self, *a, **kw)
 
-    monkeypatch.setattr(M, "collect_data_files", flaky)
+    monkeypatch.setattr(PassLedger, "record_task", flaky)
     with pytest.raises(RuntimeError):
         compact(t, spark, target_file_bytes=300 * 1024, wave_files=4, pass_id="compact-resume-test")
-    monkeypatch.setattr(M, "collect_data_files", orig)
+    monkeypatch.setattr(PassLedger, "record_task", orig)
 
     # no commit happened: table still at snapshot 1
     assert t.current_snapshot_id() == 1

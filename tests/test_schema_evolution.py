@@ -162,3 +162,35 @@ def test_rename_subject_column_then_shred(spark, tmp_path):
     assert dec.filter((F.col("org") == victim) & F.col("content").isNotNull()).count() == 0
     assert dec.filter((F.col("org") != victim) & F.col("shredded")).count() == 0
     plain.unpersist()
+
+
+def test_rename_then_spark_planned_rewrite_keeps_renamed_column(spark, tmp_path):
+    """A Spark-planned rewrite after a rename, with no post-rename
+    append, writes the renamed column under its logical name: the
+    table's schema must learn that name, or scans read it as NULL for
+    every rewritten row (and the next rewrite would keep the NULLs)."""
+    from pi2spark.maintenance import cluster, compact, delete_where
+    from pi2spark.table import ColumnPredicate
+
+    t = Table.create(str(tmp_path / "tbl"))
+    df = spark.createDataFrame(
+        [
+            (f"org{i % 12}/r{i % 5}", f"p{i:04d}.py", f"{i:040x}", ["go", "rust", "py"][i % 3],
+             f"body-{i}-" * 20)
+            for i in range(1200)
+        ],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    t.append(df.repartition(4), spark)
+    cluster(t, spark, target_file_bytes=sum(f.bytes for f in t.snapshot().files) // 6)
+    assert len(t.snapshot().files) == 6
+    want = {r.path: r.repo for r in df.collect() if r.path != "p0007.py"}
+    t.rename_column("repo", "owner")
+
+    res = delete_where(t, spark, [ColumnPredicate("path", "eq", value="p0007.py")])
+    assert res.rewritten_files >= 1
+    got = {r.path: r.owner for r in t.scan(spark).collect()}
+    assert got == want
+    compact(t, spark, target_file_bytes=1 << 30)
+    assert len(t.snapshot().files) == 1
+    assert {r.path: r.owner for r in t.scan(spark).collect()} == want

@@ -4,7 +4,8 @@ Covers the layout it must keep (rows, row order, zkey range, the
 cluster merge path afterwards), the tombstone rule it must share with
 the Spark definition (NULL subjects, NULL stored flags, two envelope
 columns, a file without the flag column, dropped columns), its job
-count, and Spark's INT96 timestamps through both users of the Arrow
+count, and timestamps — this package's INT64 ones and the INT96 ones of
+files Spark's own writer produced — through both users of the Arrow
 group writer."""
 
 import datetime
@@ -14,7 +15,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from pi2spark.maintenance import cluster, shred
-from pi2spark.table import Table
+from pi2spark.table import Table, collect_data_files
 
 
 def _rows(n):
@@ -151,22 +152,18 @@ def test_one_spark_job_per_shred_wave(spark, tmp_path):
     assert len(jobs) == 1
 
 
-def test_timestamps_survive_arrow_rewrites(spark, tmp_path):
-    """Spark writes INT96 timestamps; the Arrow group writer must write
-    them back in a form Spark reads with the same values, on the
-    cluster merge path and on shred (including pre-1678 instants,
-    which overflow nanoseconds)."""
+def _timestamp_frame(spark):
     rows = [
         (f"org{i % 5}/r", f"f{i}.py", ["go", "rust"][i % 2], b"c%d" % i,
          datetime.datetime(2020, 1, 2, 3, 4, 5, i) if i % 7 else datetime.datetime(1500, 1, 1, 0, 0, 0, i))
         for i in range(400)
     ]
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "repo string, path string, lang string, content_enc binary, ts timestamp"
     ).withColumn("shredded", F.lit(False))
-    want = {(r.path, r.ts) for r in df.collect()}
-    t = Table.create(str(tmp_path / "tbl"))
-    t.append(df.repartition(4), spark)
+
+
+def _check_timestamps_through_merge_and_shred(spark, t, want):
     cluster(t, spark, target_file_bytes=8 << 10)
     r = cluster(t, spark, target_file_bytes=16 << 10)
     assert r.details.get("mode") == "merge-no-shuffle"
@@ -175,3 +172,36 @@ def test_timestamps_survive_arrow_rewrites(spark, tmp_path):
     got = t.scan(spark).collect()
     assert {(x.path, x.ts) for x in got} == want
     assert {x.repo for x in got if x.shredded} == {"org3/r"}
+
+
+def test_timestamps_survive_arrow_rewrites(spark, tmp_path):
+    """The Arrow group writer must write timestamps back in a form
+    Spark reads with the same values, on the cluster merge path and on
+    shred (including pre-1678 instants, which overflow nanoseconds)."""
+    df = _timestamp_frame(spark)
+    want = {(r.path, r.ts) for r in df.collect()}
+    t = Table.create(str(tmp_path / "tbl"))
+    t.append(df.repartition(4), spark)
+    _check_timestamps_through_merge_and_shred(spark, t, want)
+
+
+def test_int96_timestamps_survive_arrow_rewrites(spark, tmp_path):
+    """Files of older versions were written by Spark's own writer, with
+    INT96 timestamps: the group writer still reads them at microseconds
+    through the merge path and shred."""
+    df = _timestamp_frame(spark)
+    want = {(r.path, r.ts) for r in df.collect()}
+    t = Table.create(str(tmp_path / "tbl"))
+    rel_dir, abs_dir = t.new_data_dir("spark-writer")
+    df.repartition(4).write.mode("append").parquet(abs_dir)
+    rels = [os.path.join(rel_dir, n) for n in sorted(os.listdir(abs_dir)) if n.endswith(".parquet")]
+    schema = pq.ParquetFile(os.path.join(t.root, rels[0])).schema
+    assert {schema.column(i).name: schema.column(i).physical_type for i in range(len(schema))}[
+        "ts"
+    ] == "INT96"
+    t._persist_schema(df.schema)
+    t.commit(
+        "append",
+        added=collect_data_files(t.root, rels, t.stats_columns(), bloom_cols=t.bloom_columns()),
+    )
+    _check_timestamps_through_merge_and_shred(spark, t, want)
