@@ -64,5 +64,18 @@ def bloom_may_contain(b64: str, value: str, k: int = DEFAULT_HASHES) -> bool:
     return bool(np.all(bits[(h // 8).astype(np.int64)] & (1 << (h % 8)).astype(np.uint8)))
 
 
-def bloom_may_contain_any(b64: str, values, k: int = DEFAULT_HASHES) -> bool:
-    return any(bloom_may_contain(b64, v, k) for v in values)
+def bloom_probes(values, k: int = DEFAULT_HASHES) -> np.ndarray:
+    """``(k, len(values))`` probe hashes of ``values`` — hashed once per
+    predicate, then tested against any number of bitsets with
+    ``bloom_may_contain_probes`` (each file's check is then a gather,
+    not k hash passes)."""
+    return np.stack([_hash_values(values, probe + 1) for probe in range(k)])
+
+
+def bloom_may_contain_probes(b64: str, probes: np.ndarray) -> bool:
+    """Whether the bitset may contain ANY of the values ``probes`` was
+    built from (same answer as ``bloom_may_contain`` per value)."""
+    bits = np.frombuffer(base64.b64decode(b64), dtype=np.uint8)
+    h = probes % np.uint64(len(bits) * 8)
+    hit = bits[(h // 8).astype(np.int64)] & (1 << (h % 8)).astype(np.uint8)
+    return bool(hit.all(axis=0).any())

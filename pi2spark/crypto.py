@@ -5,10 +5,11 @@ Spark-native re-expression of the reference crypto engine (SURVEY.md
 
 - The reference encrypts record-at-a-time through Kafka interceptors
   (``LocalEncryptor.java:29-46`` — AES/CBC/PKCS5Padding,
-  ``Ciphers.java:34-62``). Here the swap ops are **vectorized pandas
-  UDFs** over Arrow batches (BASELINE.json:input_hint mandates "no
-  per-row Python" — the heavy lifting happens inside OpenSSL via the
-  ``cryptography`` package, Arrow moves the batches), upgraded CBC→GCM
+  ``Ciphers.java:34-62``). Here the swap ops are **Arrow UDFs**
+  (``F.arrow_udf``) whose kernels take and return pyarrow arrays — no
+  pandas round trip, no per-row Python beyond the cipher calls
+  (BASELINE.json:input_hint): OpenSSL does the heavy lifting via the
+  ``cryptography`` package, Arrow moves the batches. Upgraded CBC→GCM
   per BASELINE.json north_star; the transformation string + IV still
   travel in the envelope exactly like ``EncryptedData.java:7-43``.
 - Per-subject key reuse inside each Arrow batch mirrors the
@@ -27,9 +28,10 @@ Spark-native re-expression of the reference crypto engine (SURVEY.md
   instead of the reference's ``MissingCryptoMaterialsException``
   (``MostRecentMaterialsProvider.java:27-36``); ``strict=True``
   restores the raising behavior for parity tests.
-- Null content → null envelope; empty-string content passes through
-  unencrypted (``JsonPersonalDataFieldDefinition.java:56-58`` empty
-  no-op; ``OneOfPersonalDataFieldDefinition.java:66-72`` unset no-op).
+- Null content → a valid envelope struct with every field NULL;
+  empty-string content passes through unencrypted
+  (``JsonPersonalDataFieldDefinition.java:56-58`` empty no-op;
+  ``OneOfPersonalDataFieldDefinition.java:66-72`` unset no-op).
 
 The kernels are module-level functions, so the UDF closures pickle
 them by reference and never capture cryptography's Rust-backed
@@ -38,17 +40,17 @@ classes (which cannot be cloudpickled by value).
 
 from __future__ import annotations
 
+import functools
 import os
 from typing import Mapping
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from cryptography.exceptions import InvalidTag
 from cryptography.hazmat.primitives.ciphers.aead import AESGCM
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from pi2spark.errors import (
     InvalidEncryptedMessageError,
@@ -67,6 +69,12 @@ GCM_NONCE_BYTES = 12
 NOOP_TRANSFORMATION = "NOOP/EMPTY"  # empty-string passthrough marker
 KMS_ID = "pi2spark-kms"
 
+# ENVELOPE_SCHEMA as the Arrow fields the kernels read and return
+_ENVELOPE_FIELDS = [
+    pa.field(f.name, pa.binary() if isinstance(f.dataType, T.BinaryType) else pa.string())
+    for f in ENVELOPE_SCHEMA.fields
+]
+
 # Scan-output schema of one decrypted PII column: plaintext + shredded
 # flag (FIXTURES.md §4 case 4 — tombstone keeps the schema stable).
 # The content type follows the original column type: string columns
@@ -74,12 +82,8 @@ KMS_ID = "pi2spark-kms"
 # reference's primary path, OneOfPersonalDataFieldDefinition.java:53-62)
 # come back as raw bytes.
 def _decrypt_result(binary: bool) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("content", T.BinaryType() if binary else T.StringType(), True),
-            T.StructField("shredded", T.BooleanType(), False),
-        ]
-    )
+    content = T.StructField("content", T.BinaryType() if binary else T.StringType())
+    return T.StructType([content, T.StructField("shredded", T.BooleanType(), False)])
 
 
 def _resolve_keys(keys) -> Mapping[str, bytes]:
@@ -87,13 +91,17 @@ def _resolve_keys(keys) -> Mapping[str, bytes]:
     return keys.value if hasattr(keys, "value") else keys
 
 
-def _batch_keys(subject: pd.Series, key: pd.Series) -> dict:
+def _batch_keys(subject: pa.Array, key: pa.Array) -> dict:
     """Key-DataFrame delivery: the join repeats a subject's key entry
     on every row of that subject, so the first row of each subject
     gives this batch's ``subject → entry`` map — the same shape the
-    broadcast delivery hands the kernels."""
-    first = (subject.notna() & ~subject.duplicated()).to_numpy()
-    return dict(zip(subject.to_numpy()[first], key.to_numpy()[first]))
+    broadcast delivery hands the kernels. Typed indices: ``take`` rejects
+    the null-typed array an empty list becomes (a batch of NULL subjects)."""
+    first: dict = {}
+    for i, s in enumerate(subject.to_pylist()):
+        if s is not None:
+            first.setdefault(s, i)
+    return dict(zip(first, key.take(pa.array(list(first.values()), pa.int64())).to_pylist()))
 
 
 def _versions(entry) -> list[tuple[str | None, bytes]] | None:
@@ -216,115 +224,108 @@ def broadcast_keys(spark: SparkSession, key_map: Mapping[str, bytes]):
     ``key_map_versioned`` (every version — needed to read rows sealed
     before a rotation).
 
-    This is one of two ways to deliver keys to the same encrypt/decrypt
-    kernels. Scale cutover: a broadcast dict costs ~150 B/subject of
-    driver AND executor heap (10^6 subjects ≈ 150 MB — the practical
-    ceiling). Beyond that, pass a **key DataFrame** (see
-    ``KeyRegistry.key_df``) to ``encrypt_table``/``decrypt_table``
+    Scale cutover: a broadcast dict costs ~150 B/subject of driver AND
+    executor heap (10^6 subjects ≈ 150 MB — the practical ceiling).
+    Beyond that, pass a **key DataFrame** (``KeyRegistry.key_df``)
     instead: the key distribution becomes a join that Spark sizes
     itself (broadcast-hash while small, shuffle join at 10^7-10^8
     subjects), with no driver materialization."""
     return spark.sparkContext.broadcast(dict(key_map))
 
 
-def _seal(subject: pd.Series, value: pd.Series, keys: Mapping, pii_column: str) -> pd.DataFrame:
+def _columns(env: pa.StructArray) -> list[list]:
+    """Python values of an envelope batch's six fields.
+    ``flatten`` carries a NULL struct's validity into its fields, so a
+    NULL envelope reads as a row with a NULL subject."""
+    fields = dict(zip((f.name for f in env.type), env.flatten()))
+    return [fields[f.name].to_pylist() for f in _ENVELOPE_FIELDS]
+
+
+def _by_subject(subjects: list, values: list | None = None) -> list[tuple[str, list[int]]]:
+    """``(subject, row indices)`` per non-NULL subject of one batch, in
+    subject order, leaving out rows whose ``values`` entry is NULL.
+    Each kernel builds one ``AESGCM`` per group (per-subject key reuse,
+    SURVEY.md §4.3)."""
+    groups: dict = {}
+    for i, s in enumerate(subjects):
+        if s is not None and (values is None or values[i] is not None):
+            groups.setdefault(s, []).append(i)
+    return sorted(groups.items())
+
+
+def _envelope(*columns) -> pa.StructArray:
+    """``ENVELOPE_SCHEMA`` batch from its six columns (arrays or lists)."""
+    arrays = [pa.array(c, f.type) for c, f in zip(columns, _ENVELOPE_FIELDS)]
+    return pa.StructArray.from_arrays(arrays, fields=_ENVELOPE_FIELDS)
+
+
+def _seal(subject: pa.Array, value: pa.Array, keys: Mapping, pii_column: str) -> pa.StructArray:
     """Encrypt kernel: (subject, plaintext) batch → envelope batch,
     with ``keys`` mapping each subject to its key entry."""
-    n = len(value)
-    out_subject = np.full(n, None, dtype=object)
-    out_kms = np.full(n, None, dtype=object)
-    out_data = np.full(n, None, dtype=object)
-    out_field = np.full(n, None, dtype=object)
-    out_transf = np.full(n, None, dtype=object)
-    out_iv = np.full(n, None, dtype=object)
-
-    frame = pd.DataFrame({"s": subject, "v": value})
-    if (frame["s"].isna() & frame["v"].notna()).any():
+    valid = value.is_valid()
+    if pc.any(pc.and_(subject.is_null(), valid)).as_py():
         raise SubjectIdentifierRetrievalError(pii_column)
-    # Group by subject: one AESGCM object per subject per batch
-    # (per-subject key reuse, SURVEY.md §4.3).
-    for subj, grp in frame[frame["v"].notna()].groupby("s", sort=True):
+    # binary PII (serialized sub-message bytes) is encrypted as-is; a
+    # string column's UTF-8 bytes are reinterpreted, not copied
+    values = value.cast(pa.binary()).to_pylist()
+    out_kms, out_data, out_transf, out_iv = ([None] * len(values) for _ in range(4))
+    for subj, idxs in _by_subject(subject.to_pylist(), values):
         versions = _versions(keys.get(subj))
         if not versions:
             raise MissingCryptoMaterialsError(str(subj))
-        # new writes always use the LATEST material (A18); its id
-        # travels in kms_id so post-rotation decrypts pick the
-        # right version (key rotation, maintenance.reencrypt)
+        # new writes use the LATEST material (A18); its id travels in
+        # kms_id so post-rotation decrypts pick the right version
         mid, key = versions[-1]
-        aead = AESGCM(key)
-        idxs = grp.index.to_numpy()
-        vals = grp["v"].to_numpy()
+        aead, kms = AESGCM(key), _kms_id(mid)
         nonce_pool = os.urandom(GCM_NONCE_BYTES * len(idxs))
-        out_subject[idxs] = subj
-        out_kms[idxs] = _kms_id(mid)
-        out_field[idxs] = pii_column
-        for j, (i, v) in enumerate(zip(idxs, vals)):
-            if len(v) == 0:
-                # empty no-op: passes through unencrypted
-                # (works for both "" and b"")
-                out_data[i] = b""
-                out_transf[i] = NOOP_TRANSFORMATION
-                out_iv[i] = b""
-            else:
-                nonce = nonce_pool[j * GCM_NONCE_BYTES : (j + 1) * GCM_NONCE_BYTES]
-                # binary PII (serialized sub-message bytes) is
-                # encrypted as-is; strings encode to UTF-8
-                payload = v if isinstance(v, (bytes, bytearray)) else v.encode("utf-8")
-                out_data[i] = aead.encrypt(nonce, bytes(payload), None)
-                out_transf[i] = TRANSFORMATION
-                out_iv[i] = nonce
-    return pd.DataFrame(
-        {
-            "subject_id": out_subject,
-            "kms_id": out_kms,
-            "data": out_data,
-            "personal_data_field": out_field,
-            "used_transformation": out_transf,
-            "initialization_vector": out_iv,
-        }
+        for j, i in enumerate(idxs):
+            out_kms[i] = kms
+            if not values[i]:  # empty no-op: passes through unencrypted
+                out_data[i], out_transf[i], out_iv[i] = b"", NOOP_TRANSFORMATION, b""
+                continue
+            nonce = nonce_pool[j * GCM_NONCE_BYTES : (j + 1) * GCM_NONCE_BYTES]
+            out_data[i] = aead.encrypt(nonce, values[i], None)
+            out_transf[i], out_iv[i] = TRANSFORMATION, nonce
+    # a NULL value leaves every field NULL (the struct itself is valid)
+    subject_out, field_out = pc.if_else(valid, subject, None), pc.if_else(valid, pii_column, None)
+    return _envelope(subject_out, out_kms, out_data, field_out, out_transf, out_iv)
+
+
+def _open_rows(env: pa.StructArray, keys: Mapping, strict: bool, binary: bool) -> pa.StructArray:
+    """Decrypt kernel: envelope batch → (plaintext, shredded) batch."""
+    subjects, kms_ids, datas, _, transfs, ivs = _columns(env)
+    content: list = [None] * len(subjects)
+    shredded = [False] * len(subjects)
+    for subj, idxs in _by_subject(subjects):
+        mats = _SubjectMaterials(subj, _versions(keys.get(subj)), strict)
+        for i in idxs:
+            if transfs[i] == NOOP_TRANSFORMATION:
+                content[i] = b""
+                continue
+            content[i] = mats.open(kms_ids[i], ivs[i], datas[i])
+            shredded[i] = content[i] is None  # material gone: tombstone
+    plain = pa.array(content, pa.binary())
+    if not binary:
+        try:
+            plain = plain.cast(pa.string())  # UTF-8 validated in C
+        except pa.ArrowInvalid as e:
+            # only an invalid row changes under a lossy decode round trip
+            rows = zip(subjects, content)
+            bad = next(s for s, c in rows if c and c.decode(errors="replace").encode() != c)
+            msg = f"plaintext for subject {bad} is not valid UTF-8"
+            raise InvalidEncryptedMessageError(msg) from e
+    return pa.StructArray.from_arrays(
+        [plain, pa.array(shredded, pa.bool_())],
+        fields=[pa.field("content", plain.type), pa.field("shredded", pa.bool_(), nullable=False)],
     )
 
 
-def _open_rows(env: pd.DataFrame, keys: Mapping, strict: bool, binary: bool) -> pd.DataFrame:
-    """Decrypt kernel: envelope batch → (plaintext, shredded) batch."""
-    n = len(env)
-    content = np.full(n, None, dtype=object)
-    shredded = np.zeros(n, dtype=bool)
-    env = env.reset_index(drop=True)
-    present = env["subject_id"].notna()
-    for subj, grp in env[present].groupby("subject_id", sort=True):
-        mats = _SubjectMaterials(subj, _versions(keys.get(subj)), strict)
-        idxs = grp.index.to_numpy()
-        transfs = grp["used_transformation"].to_numpy()
-        datas = grp["data"].to_numpy()
-        ivs = grp["initialization_vector"].to_numpy()
-        kms_ids = grp["kms_id"].to_numpy()
-        for i, transf, data, iv, kid in zip(idxs, transfs, datas, ivs, kms_ids):
-            if transf == NOOP_TRANSFORMATION:
-                content[i] = b"" if binary else ""
-                continue
-            plain = mats.open(kid, iv, data)
-            if plain is None:
-                shredded[i] = True  # material gone: tombstone
-                continue
-            try:
-                content[i] = plain if binary else plain.decode("utf-8")
-            except UnicodeDecodeError as e:
-                raise InvalidEncryptedMessageError(
-                    f"plaintext for subject {subj} is not valid UTF-8"
-                ) from e
-    return pd.DataFrame({"content": content, "shredded": shredded})
-
-
-def _reseal(env: pd.DataFrame, keys: Mapping, rotate_set: set) -> pd.DataFrame:
+def _reseal(env: pa.StructArray, keys: Mapping, rotate_set: set) -> pa.StructArray:
     """Reencrypt kernel: envelope batch → envelope batch with the rows
     of ``rotate_set`` subjects resealed under their latest material."""
-    env = env.reset_index(drop=True)
-    out_data = env["data"].copy()
-    out_iv = env["initialization_vector"].copy()
-    out_kms = env["kms_id"].copy()
-    present = env["subject_id"].notna()
-    for subj, grp in env[present].groupby("subject_id", sort=True):
+    cols = _columns(env)
+    subjects, kms_ids, datas, _, transfs, ivs = cols
+    for subj, idxs in _by_subject(subjects):
         if subj not in rotate_set:
             continue
         versions = _versions(keys.get(subj))
@@ -334,27 +335,14 @@ def _reseal(env: pd.DataFrame, keys: Mapping, rotate_set: set) -> pd.DataFrame:
         mats = _SubjectMaterials(subj, versions, strict=True)
         latest_mid = versions[-1][0]
         enc_aead = mats.aead(latest_mid)
-        for i in grp.index.to_numpy():
-            if env.at[i, "used_transformation"] == NOOP_TRANSFORMATION:
-                continue
-            kid = env.at[i, "kms_id"]
-            if _material_id(kid) == latest_mid:
-                continue  # already current
-            plain = mats.open(kid, env.at[i, "initialization_vector"], env.at[i, "data"])
-            nonce = os.urandom(GCM_NONCE_BYTES)
-            out_data.at[i] = enc_aead.encrypt(nonce, plain, None)
-            out_iv.at[i] = nonce
-            out_kms.at[i] = _kms_id(latest_mid)
-    return pd.DataFrame(
-        {
-            "subject_id": env["subject_id"],
-            "kms_id": out_kms,
-            "data": out_data,
-            "personal_data_field": env["personal_data_field"],
-            "used_transformation": env["used_transformation"],
-            "initialization_vector": out_iv,
-        }
-    )
+        for i in idxs:
+            if transfs[i] == NOOP_TRANSFORMATION or _material_id(kms_ids[i]) == latest_mid:
+                continue  # no-op row, or already current
+            plain = mats.open(kms_ids[i], ivs[i], datas[i])
+            ivs[i] = os.urandom(GCM_NONCE_BYTES)
+            datas[i] = enc_aead.encrypt(ivs[i], plain, None)
+            kms_ids[i] = _kms_id(latest_mid)
+    return _envelope(*cols)
 
 
 def make_encrypt_udf(keys, pii_column: str):
@@ -364,15 +352,15 @@ def make_encrypt_udf(keys, pii_column: str):
     argument (see ``encrypt_table``)."""
     if isinstance(keys, DataFrame):
 
-        def _encrypt(subject: pd.Series, value: pd.Series, key: pd.Series) -> pd.DataFrame:
+        def _encrypt(subject: pa.Array, value: pa.Array, key: pa.Array) -> pa.Array:
             return _seal(subject, value, _batch_keys(subject, key), pii_column)
 
     else:
 
-        def _encrypt(subject: pd.Series, value: pd.Series) -> pd.DataFrame:
+        def _encrypt(subject: pa.Array, value: pa.Array) -> pa.Array:
             return _seal(subject, value, _resolve_keys(keys), pii_column)
 
-    return pandas_udf(ENVELOPE_SCHEMA)(_encrypt)
+    return F.arrow_udf(_encrypt, ENVELOPE_SCHEMA)
 
 
 def make_decrypt_udf(keys, strict: bool = False, binary: bool = False):
@@ -384,15 +372,15 @@ def make_decrypt_udf(keys, strict: bool = False, binary: bool = False):
     a second argument."""
     if isinstance(keys, DataFrame):
 
-        def _decrypt(env: pd.DataFrame, key: pd.Series) -> pd.DataFrame:
-            return _open_rows(env, _batch_keys(env["subject_id"], key), strict, binary)
+        def _decrypt(env: pa.Array, key: pa.Array) -> pa.Array:
+            return _open_rows(env, _batch_keys(env.field("subject_id"), key), strict, binary)
 
     else:
 
-        def _decrypt(env: pd.DataFrame) -> pd.DataFrame:
+        def _decrypt(env: pa.Array) -> pa.Array:
             return _open_rows(env, _resolve_keys(keys), strict, binary)
 
-    return pandas_udf(_decrypt_result(binary))(_decrypt)
+    return F.arrow_udf(_decrypt, _decrypt_result(binary))
 
 
 def make_reencrypt_udf(keys, subjects):
@@ -403,15 +391,28 @@ def make_reencrypt_udf(keys, subjects):
     the LATEST material, with the new material id stamped into
     ``kms_id``; every other row passes through byte-identical.
     ``keys`` must be a versioned map (``KeyRegistry.key_map_versioned``,
-    plain or broadcast) — old versions are needed to read, the new one
-    to write. Vectorized like the other swap ops; plaintext exists only
-    transiently inside the UDF batch."""
+    plain or broadcast): old versions read, the latest writes."""
     rotate_set = set(subjects)
 
-    def _reenc(env: pd.DataFrame) -> pd.DataFrame:
+    def _reenc(env: pa.Array) -> pa.Array:
         return _reseal(env, _resolve_keys(keys), rotate_set)
 
-    return pandas_udf(ENVELOPE_SCHEMA)(_reenc)
+    return F.arrow_udf(_reenc, ENVELOPE_SCHEMA)
+
+
+@functools.lru_cache(maxsize=8)
+def _cached_udf(factory, keys, *args):
+    return factory(keys, *args)
+
+
+def _udf(factory, keys, *args):
+    """``factory(keys, *args)``, reused while the same Broadcast or key
+    DataFrame (hashed by identity) comes back: a UDF pickles its closure
+    and builds its JVM twin on first use (about 15 Py4J round trips).
+    A plain mapping may change between calls, so it is never reused."""
+    if isinstance(keys, Mapping):
+        return factory(keys, *args)
+    return _cached_udf(factory, keys, *args)
 
 
 _KEY_COL = "__pi2_key"
@@ -438,27 +439,25 @@ def encrypt_table(df: DataFrame, spec: ProtectionSpec, keys) -> DataFrame:
     No-PII spec → returned unchanged apart from the flag (driver
     short-circuit, A11).
 
-    ``keys`` delivers the keys to one encrypt kernel, either as a
-    dict / Broadcast map (``KeyRegistry.key_map`` or
-    ``key_map_versioned``; fine to ~10^6 subjects) or as a key
-    **DataFrame** (``KeyRegistry.key_df``: ``key`` is every version,
-    ``array<struct<material_id, key>>``, or a plain ``binary`` key) —
-    the unbounded-cardinality join path (see ``broadcast_keys`` for the
-    cutover). Either way rows are sealed under the subject's latest
-    material and stamped ``pi2spark-kms#<material_id>`` when the keys
-    are versioned."""
+    ``keys`` is a dict / Broadcast map (``KeyRegistry.key_map`` or
+    ``key_map_versioned``) or a key **DataFrame** (``KeyRegistry.key_df``,
+    whose ``key`` is ``array<struct<material_id, key>>`` or ``binary``;
+    see ``broadcast_keys`` for the cutover). Either way rows are sealed
+    under the subject's latest material, stamped
+    ``pi2spark-kms#<material_id>`` when the keys are versioned."""
     if not spec.requires_encryption:
         return df.withColumn("shredded", F.lit(False))
     flag = F.lit(False).alias("shredded")
     keyed = isinstance(keys, DataFrame)
     src = _join_keys(df, spec, keys) if keyed else df
-    key_args = [F.col(_KEY_COL)] if keyed else []
+    # ``src[name]`` binds a column in one Py4J call, ``F.col`` in three
+    key_args = [src[_KEY_COL]] if keyed else []
     cols: list[Column] = []
     for name in df.columns:
         if name in spec.pii_columns:
-            enc = make_encrypt_udf(keys, name)
+            enc = _udf(make_encrypt_udf, keys, name)
             cols.append(
-                enc(F.col(spec.subject_column), F.col(name), *key_args).alias(
+                enc(src[spec.subject_column], src[name], *key_args).alias(
                     spec.envelope_column(name),
                     # envelope-slot marker: lets decrypt locate and
                     # validate the slot even off naming convention
@@ -468,7 +467,7 @@ def encrypt_table(df: DataFrame, spec: ProtectionSpec, keys) -> DataFrame:
             )
         else:
             # an incoming flag (a decrypted frame) is reset in place
-            cols.append(flag if name == "shredded" else F.col(name))
+            cols.append(flag if name == "shredded" else src[name])
     # one projection: every extra DataFrame step is driver-side
     # analysis paid on each append
     return src.select(*cols, *([] if "shredded" in df.columns else [flag]))
@@ -510,7 +509,7 @@ def decrypt_table(df: DataFrame, spec: ProtectionSpec, keys, strict: bool = Fals
     out = out.select(
         "*",
         *[
-            make_decrypt_udf(keys, strict=strict, binary=name in spec.binary_columns)(
+            _udf(make_decrypt_udf, keys, strict, name in spec.binary_columns)(
                 F.col(env_cols[name]), *key_args
             ).alias(f"__dec_{name}")
             for name in spec.pii_columns

@@ -438,7 +438,9 @@ def _cluster_provenance_matches(table: Table, columns: list, curve: str, bits: i
     if summ is None:
         return None
     ok = (
-        summ.get("cluster_columns") == columns
+        # compared under today's names: a rename since the record
+        # leaves the layout (and its key space) intact
+        table.resolve_columns(summ["cluster_columns"], summ.get("schema_ops", 0)) == columns
         and summ.get("curve") == curve
         and summ.get("bits") == bits
         and summ.get("zkey_gen") is not None
@@ -579,6 +581,7 @@ def _cluster_attempt(
             summary = {
                 "pass_id": pass_id,
                 "cluster_columns": list(columns),
+                "schema_ops": len(table.schema_ops()),
                 "curve": curve,
                 "bits": bits,
                 "mode": "merge",
@@ -637,6 +640,9 @@ def _cluster_attempt(
     summ = {
         "pass_id": pass_id,
         "cluster_columns": list(columns),
+        # the number of schema ops the columns are named under: later
+        # renames resolve through Table.resolve_columns
+        "schema_ops": len(table.schema_ops()),
         "curve": curve,
         "bits": bits,
         "incremental": incremental,
@@ -1798,13 +1804,24 @@ def maintain(
     the steady-state scheduler preserves a custom layout instead of
     silently re-clustering appends under module defaults (which would
     overwrite the table's layout contract and defeat the merge path's
-    provenance gate). Module defaults apply only to a never-clustered
-    table; explicit arguments always win."""
+    provenance gate). The recorded columns are followed through later
+    renames; a dropped one raises ``Pi2SparkError`` naming it. Module
+    defaults apply only to a never-clustered table; explicit arguments
+    always win."""
     prov = _cluster_provenance(table) or {}
     if curve is None:
         curve = prov.get("curve", "morton")
     if cluster_columns is None:
-        cluster_columns = prov.get("cluster_columns", ["repo", "lang", "path"])
+        recorded = prov.get("cluster_columns", ["repo", "lang", "path"])
+        # a record without its schema-op count (older writers) resolves
+        # through every op
+        cluster_columns = table.resolve_columns(recorded, prov.get("schema_ops", 0))
+        dropped = [c for c, now in zip(recorded, cluster_columns) if now is None]
+        if dropped:
+            raise Pi2SparkError(
+                f"cluster columns {dropped} of the table's layout were dropped; "
+                "pass cluster_columns= to maintain() to choose a new layout"
+            )
     if cluster_bits is None:
         cluster_bits = prov.get("bits", 16)
     out: dict = {}

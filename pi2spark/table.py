@@ -449,6 +449,14 @@ class ColumnPredicate:
     value: object = None
     values: tuple = ()
 
+    @functools.cached_property
+    def _bloom_probes(self):
+        """The equality values' bloom probes, hashed once per predicate
+        rather than once per file it is tested against."""
+        from pi2spark.bloom import bloom_probes
+
+        return bloom_probes((self.value,) if self.op == "eq" else self.values)
+
     def may_match(self, f: DataFile) -> bool:
         if self.op == "isnull":
             # prune only on an exact null count of 0 (absence = unknown)
@@ -459,10 +467,9 @@ class ColumnPredicate:
             return n is None or n < f.rows
         # bloom check first for equality predicates — near-exact
         if self.op in ("eq", "in") and self.column in f.blooms:
-            from pi2spark.bloom import bloom_may_contain_any
+            from pi2spark.bloom import bloom_may_contain_probes
 
-            vals = (self.value,) if self.op == "eq" else self.values
-            if not bloom_may_contain_any(f.blooms[self.column], vals):
+            if not bloom_may_contain_probes(f.blooms[self.column], self._bloom_probes):
                 return False
         st = f.stats.get(self.column)
         if not st:
@@ -495,6 +502,27 @@ def _protection_entry(document, dialect: str) -> dict:
 # ---------------------------------------------------------------------------
 # the table
 # ---------------------------------------------------------------------------
+
+
+def _replay_schema_ops(src: dict[str, list[str]], ops: list[dict]) -> dict[str, list[str]]:
+    """Apply schema-evolution ``ops`` to ``src`` (logical column -> the
+    columns coalesced into it, highest priority first): a rename moves
+    a column to its new name, or onto the new name's sources when both
+    exist; an add opens a column with no sources; a drop removes one.
+    The one replay of rename/drop semantics that ``column_sources`` and
+    ``resolve_columns`` share."""
+    for op in ops:
+        if op["op"] == "rename":
+            old, new = op["from"], op["to"]
+            if old in src and new in src:
+                src[new] = src[new] + src.pop(old)
+            elif old in src:
+                src = {(new if k == old else k): v for k, v in src.items()}
+        elif op["op"] == "add":
+            src.setdefault(op["name"], [])
+        elif op["op"] == "drop":
+            src.pop(op["name"], None)
+    return src
 
 
 class Table:
@@ -1397,18 +1425,17 @@ class Table:
         columns."""
         schema = self.data_schema()
         src = {f.name: [f.name] for f in schema.fields} if schema is not None else {}
-        for op in self.schema_ops():
-            if op["op"] == "rename":
-                old, new = op["from"], op["to"]
-                if old in src and new in src:
-                    src[new] = src[new] + src.pop(old)
-                elif old in src:
-                    src = {(new if k == old else k): v for k, v in src.items()}
-            elif op["op"] == "add":
-                src.setdefault(op["name"], [])
-            elif op["op"] == "drop":
-                src.pop(op["name"], None)
-        return src
+        return _replay_schema_ops(src, self.schema_ops())
+
+    def resolve_columns(self, names: Sequence[str], since: int = 0) -> list[str | None]:
+        """Today's logical names of ``names`` as they stood after the
+        first ``since`` schema ops: each later rename is followed, and a
+        later drop resolves its column to None. Lets a record made under
+        an older schema (a layout's ``cluster_columns``) name the
+        current columns."""
+        now = _replay_schema_ops({n: [n] for n in names}, self.schema_ops()[since:])
+        by_source = {s: logical for logical, sources in now.items() for s in sources}
+        return [by_source.get(n) for n in names]
 
     def _logical_columns(self) -> list[str]:
         """Column names of the current logical schema (physical union

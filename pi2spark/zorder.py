@@ -22,15 +22,13 @@ Spark path calls it from one Arrow-batched pandas UDF
 (``make_curve_udf``) and the clustering pass range-partitions on the
 key; a clustering pass small enough for one output file calls it from
 its single pyarrow task instead (``maintenance.cluster``).
-``morton_interleave`` keeps the pure column-expression form for
-integer columns that never need bucketing.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -202,16 +200,10 @@ def _scaled_buckets(bounds: np.ndarray, vals: np.ndarray, bits: int) -> np.ndarr
     return np.minimum((ordinal * scale).astype(np.int64), (1 << bits) - 1)
 
 
-# ---------------------------------------------------------------------------
-# Morton interleave — pure column expression (JVM-side, codegen'd)
-# ---------------------------------------------------------------------------
-
-
 def _check_key_width(bits: int, k: int) -> None:
     """The interleaved key must fit a signed 64-bit long: numpy shifts
-    of >=64 silently wrap and the JVM masks shift counts mod 64, so an
-    oversized configuration would produce corrupted cluster keys with
-    no error. Fail loudly instead."""
+    of >=64 silently wrap, so an oversized configuration would produce
+    corrupted cluster keys with no error. Fail loudly instead."""
     if bits < 1:
         raise UnconfiguredError(f"cluster key bits must be >= 1, got {bits}")
     if bits * k > 63:
@@ -220,19 +212,6 @@ def _check_key_width(bits: int, k: int) -> None:
             "bits) but must fit in 63 (signed long); lower --bits or drop "
             "cluster columns"
         )
-
-
-def morton_interleave(bucket_cols: list[Column], bits: int = DEFAULT_BITS) -> Column:
-    """Bit-interleave k bucket ints into one long: bit i of column j
-    lands at position i*k + j. 3 cols × 16 bits → 48-bit key."""
-    k = len(bucket_cols)
-    _check_key_width(bits, k)
-    acc = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, c in enumerate(bucket_cols):
-            bit = F.shiftright(c.cast("long"), i).bitwiseAND(F.lit(1))
-            acc = acc.bitwiseOR(F.shiftleft(bit, i * k + j))
-    return acc
 
 
 # ---------------------------------------------------------------------------

@@ -22,7 +22,7 @@ from pi2spark.errors import ConcurrentCommitError, UnconfiguredError
 from pi2spark.maintenance import expire_snapshots, shred
 from pi2spark.registry import KeyRegistry
 from pi2spark.table import DataFile, Table
-from pi2spark.zorder import morton_interleave, with_cluster_key
+from pi2spark.zorder import check_cluster_key, with_cluster_key
 
 
 # ---------------------------------------------------------------------------
@@ -156,7 +156,7 @@ def test_cluster_key_width_validation(spark):
     with pytest.raises(UnconfiguredError):
         with_cluster_key(df, ("a", "b", "c"), bits=22)  # 66 bits > 63
     with pytest.raises(UnconfiguredError):
-        morton_interleave([F.col("a"), F.col("b")], bits=32)  # 64 bits
+        check_cluster_key(("a", "b"), bits=32, curve="morton")  # 64 bits
     # 3 x 21 = 63 bits is the legal maximum
     out = with_cluster_key(df, ("a", "b", "c"), bits=21)
     assert out.select("zkey").count() == 4

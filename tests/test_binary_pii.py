@@ -72,6 +72,19 @@ def test_binary_roundtrip_including_empty_and_null(spark):
     assert dec.filter(F.col("shredded")).count() == 0
 
 
+def test_non_utf8_plaintext_under_string_spec_raises_invalid_message(spark):
+    """A ciphertext whose plaintext is not UTF-8, read back under a
+    string PII column, is a corrupt message, not a decode traceback."""
+    schema, spec = _binary_spec()
+    df = spark.createDataFrame([("alice", b"\xff\xfe")], schema)
+    reg = KeyRegistry()
+    reg.register("alice")
+    enc = encrypt_table(df, spec, reg.key_map())
+    as_string = ProtectionSpec(subject_column="user", pii_columns=("payload",), table_name="msgs")
+    with pytest.raises(Exception, match="InvalidEncryptedMessageError.*subject alice is not valid UTF-8"):
+        decrypt_table(enc, as_string, reg.key_map()).collect()
+
+
 def test_binary_shred_tombstone(spark):
     schema, spec = _binary_spec()
     df = spark.createDataFrame([("alice", b"secret"), ("bob", b"kept")], schema)

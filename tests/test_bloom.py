@@ -1,8 +1,11 @@
 """Per-file subject Bloom filters: unit props + shred-targeting gain."""
 
+import base64
+import random
+
 from pyspark.sql import functions as F
 
-from pi2spark.bloom import bloom_may_contain, build_bloom
+from pi2spark.bloom import bloom_may_contain, bloom_may_contain_probes, bloom_probes, build_bloom
 from pi2spark.crypto import broadcast_keys, encrypt_table
 from pi2spark.maintenance import cluster, shred
 from pi2spark.registry import KeyRegistry
@@ -22,6 +25,46 @@ def test_bloom_membership_and_fpr():
 
 def test_bloom_deterministic():
     assert build_bloom(["a", "b"]) == build_bloom(["b", "a"])  # order-free
+
+
+def test_probes_agree_with_per_value_check():
+    """Hashing a predicate's values once and testing each bitset with
+    the probes answers exactly as testing every value per bitset."""
+    rng = random.Random(11)
+    for _ in range(60):
+        m_bits = rng.choice([64, 512, 4096, 8192])
+        members = [f"org{rng.randrange(10**6)}/r{i}" for i in range(rng.randrange(1, 700))]
+        random_bits = base64.b64encode(rng.randbytes(m_bits // 8)).decode("ascii")
+        values = rng.sample(members, min(2, len(members))) + [
+            f"absent{rng.randrange(10**6)}" for _ in range(rng.randrange(0, 4))
+        ]
+        rng.shuffle(values)
+        for bits in (build_bloom(members, m_bits=m_bits), random_bits):
+            for n in range(len(values) + 1):
+                want = any(bloom_may_contain(bits, v) for v in values[:n])
+                assert bloom_may_contain_probes(bits, bloom_probes(values[:n])) == want
+
+
+def test_plan_files_matches_per_value_bloom_pruning(spark, tmp_path):
+    t = Table.create(str(tmp_path / "tbl"))
+    rows = [(f"org{i % 90}/r", f"p{i}.py", "c", "py", "x") for i in range(900)]
+    df = spark.createDataFrame(rows, "repo string, path string, commit string, lang string, content string")
+    t.append(df.repartition(6), spark)
+    files = t.snapshot().files
+    assert len(files) == 6 and all("repo" in f.blooms for f in files)
+
+    def per_value(f, vals):
+        mn, mx = f.stats["repo"]
+        return any(bloom_may_contain(f.blooms["repo"], v) for v in vals) and any(
+            mn <= v <= mx for v in vals
+        )
+
+    rng = random.Random(5)
+    for _ in range(20):
+        vals = tuple(rng.sample([r[0] for r in rows] + ["org999/none"], rng.randrange(1, 4)))
+        for pred in (ColumnPredicate("repo", "in", values=vals), ColumnPredicate("repo", "eq", vals[0])):
+            want = [f for f in files if per_value(f, vals if pred.op == "in" else vals[:1])]
+            assert t.plan_files(filters=[pred])[1] == want
 
 
 def test_shred_targeting_with_blooms(spark, tmp_table_root, tmp_path):

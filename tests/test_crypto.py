@@ -106,7 +106,8 @@ def test_null_content_noop(spark):
     reg.register("a")
     enc = encrypt_table(df, spec, reg.key_map())
     env = enc.collect()[0].content_enc
-    assert env is None or env.data is None  # null envelope (no-op)
+    # a valid envelope struct whose every field is NULL (no-op)
+    assert env is not None and all(v is None for v in env.asDict().values())
     dec = decrypt_table(enc, spec, reg.key_map())
     row = dec.collect()[0]
     assert row.content is None and row.shredded is False
@@ -142,3 +143,31 @@ def test_shredded_subject_tombstones_on_scan(spark):
     with pytest.raises(Exception) as e:
         decrypt_table(enc, spec, reg.key_map(), strict=True).collect()
     assert "org0/gone" in str(e.value)
+
+
+def test_udfs_reused_only_for_the_same_keys_object(spark):
+    from pi2spark.crypto import _udf, make_decrypt_udf, make_encrypt_udf
+
+    reg = KeyRegistry()
+    reg.register_all(["org0/gone", "org1/live"])
+    bk = broadcast_keys(spark, reg.key_map())
+    assert _udf(make_encrypt_udf, bk, "content") is _udf(make_encrypt_udf, bk, "content")
+    assert _udf(make_decrypt_udf, bk, False, True) is not _udf(make_decrypt_udf, bk, False, False)
+    plain_map = reg.key_map()
+    assert _udf(make_encrypt_udf, plain_map, "content") is not _udf(
+        make_encrypt_udf, plain_map, "content"
+    )
+
+    # a re-broadcast after a forget gets its own UDF: the scan sees the
+    # new key map, not the one the first scan's UDF captured
+    spec = ProtectionSpec.for_source_files()
+    df = spark.createDataFrame([Row(repo="org0/gone", path="a", commit="c", lang="l", content="x")])
+    enc = encrypt_table(df, spec, bk).cache()
+    assert [r.content for r in decrypt_table(enc, spec, bk).collect()] == ["x"]
+    reg.forget("org0/gone")
+    bk2 = broadcast_keys(spark, reg.key_map())
+    assert [(r.content, r.shredded) for r in decrypt_table(enc, spec, bk2).collect()] == [
+        (None, True)
+    ]
+    assert [r.content for r in decrypt_table(enc, spec, bk).collect()] == ["x"]
+    enc.unpersist()

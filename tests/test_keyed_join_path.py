@@ -83,3 +83,30 @@ def test_keyed_binary_pii_roundtrip(spark):
     dec = decrypt_table(encrypt_table(df, spec, kdf), spec, kdf)
     got = {(r.user, None if r.payload is None else bytes(r.payload)) for r in dec.collect()}
     assert got == {("u1", b"\x00bin\xff"), ("u2", b""), ("u2", None)}
+
+
+def test_keyed_batches_with_no_subject(spark):
+    """A batch in which no row has a subject gives the key-DataFrame
+    kernels an empty subject → key map: encrypting all-NULL rows and
+    decrypting all-NULL envelopes (shred tombstones, NULL content) must
+    pass through, as they do under a broadcast map."""
+    reg = KeyRegistry()
+    reg.register("r1")
+    kdf = reg.key_df(spark)
+    nulls = spark.createDataFrame([(None, None), (None, None)], "repo string, content string")
+    enc = encrypt_table(nulls.coalesce(1), SPEC, kdf)
+    rows = enc.collect()
+    assert [r.content_enc.asDict() for r in rows] == [
+        dict.fromkeys(r.content_enc.asDict()) for r in rows
+    ]
+    dec = decrypt_table(enc, SPEC, kdf).collect()
+    assert [(r.content, r.shredded) for r in dec] == [(None, False), (None, False)]
+
+    # shred tombstones on disk: the envelope struct itself is NULL
+    live = spark.createDataFrame([("r1", "a"), ("r1", "b")], "repo string, content string")
+    env_type = encrypt_table(live, SPEC, kdf).schema["content_enc"].dataType
+    tomb = encrypt_table(live, SPEC, kdf).select(
+        "repo", F.lit(None).cast(env_type).alias("content_enc"), F.lit(True).alias("shredded")
+    )
+    dec = decrypt_table(tomb.coalesce(1), SPEC, kdf).collect()
+    assert [(r.repo, r.content, r.shredded) for r in dec] == [("r1", None, True)] * 2

@@ -111,12 +111,15 @@ def test_merge_path_refuses_mixed_generations(spark, tmp_path):
 def test_provenance_gate_requires_bits_and_generation(tmp_path):
     from pi2spark.maintenance import _cluster_provenance_matches
 
-    class _Stub:
+    class _Stub(Table):
         def __init__(self, summ):
             self._summ = summ
 
         def snapshots(self):
             return [{"summary": self._summ}]
+
+        def schema_ops(self):
+            return []  # no schema evolution: recorded names are today's
 
     base = {"cluster_columns": ["repo", "lang", "path"], "curve": "morton"}
     # legacy summary without bits → conservative mismatch

@@ -194,3 +194,39 @@ def test_rename_then_spark_planned_rewrite_keeps_renamed_column(spark, tmp_path)
     compact(t, spark, target_file_bytes=1 << 30)
     assert len(t.snapshot().files) == 1
     assert {r.path: r.owner for r in t.scan(spark).collect()} == want
+
+
+def test_maintain_after_renaming_a_cluster_column(spark, tmp_path):
+    """The layout records its cluster columns under the names they had;
+    ``maintain()`` follows a later rename to the new name instead of
+    clustering on a column the schema no longer has, and a dropped
+    cluster column raises a typed error naming it."""
+    from pi2spark.maintenance import _cluster_provenance_matches, cluster, maintain
+
+    t = Table.create(str(tmp_path / "tbl"))
+    rows = [(f"o{i % 7}/r", f"p{i}.py", f"c{i}", ["go", "py"][i % 2], f"body-{i}") for i in range(120)]
+    df = spark.createDataFrame(rows, "repo string, path string, commit string, lang string, content string")
+    t.append(df.repartition(2), spark)
+    cluster(t, spark)
+    t.rename_column("repo", "owner")
+    assert _cluster_provenance_matches(t, ["owner", "lang", "path"], "morton", 16) is not None
+    assert _cluster_provenance_matches(t, ["repo", "lang", "path"], "morton", 16) is None
+
+    more = [(f"o{i % 7}/r", f"q{i}.py", f"d{i}", "go", f"new-{i}") for i in range(30)]
+    t.append(
+        spark.createDataFrame(more, "owner string, path string, commit string, lang string, content string"),
+        spark,
+    )
+    out = maintain(t, spark, cluster_backlog_threshold=1)
+    assert not out["cluster"].skipped
+    assert t.snapshots()[-1]["summary"]["cluster_columns"] == ["owner", "lang", "path"]
+    want = {(r[1], r[0]) for r in rows + more}
+    assert {(r.path, r.owner) for r in t.scan(spark).collect()} == want
+
+    t.drop_column("lang")
+    t.append(
+        spark.createDataFrame([("o1/r", "z.py", "e", "late")], "owner string, path string, commit string, content string"),
+        spark,
+    )
+    with pytest.raises(Pi2SparkError, match="lang"):
+        maintain(t, spark, cluster_backlog_threshold=1)

@@ -9,16 +9,15 @@ from pyspark.sql import functions as F
 from pi2spark.zorder import (
     column_boundaries,
     hilbert_index_np,
-    morton_interleave,
+    morton_interleave_np,
     with_cluster_key,
 )
 
 
-def test_morton_golden_vectors(spark):
+def test_morton_golden_vectors():
     # interleave(x,y) for 2D: known Morton order (x bit j at position k*i+j)
-    df = spark.createDataFrame([(x, y) for x in range(4) for y in range(4)], "x long, y long")
-    out = df.withColumn("m", morton_interleave([F.col("x"), F.col("y")], bits=2))
-    got = {(r.x, r.y): r.m for r in out.collect()}
+    coords = np.array([[x, y] for x in range(4) for y in range(4)], dtype=np.uint64)
+    got = {(int(x), int(y)): int(m) for (x, y), m in zip(coords, morton_interleave_np(coords, bits=2))}
     # standard Morton (y in the higher interleave slot):
     assert got[(0, 0)] == 0
     assert got[(1, 0)] == 1
@@ -46,13 +45,10 @@ def test_hilbert_golden_vectors():
 def test_morton_locality_not_adjacent_but_bounded():
     # Morton consecutive codes are neighbors within the same quad most
     # of the time; just sanity: code is a bijection on the grid
-    from pyspark.sql import SparkSession
-
-    coords = [(x, y, z) for x in range(4) for y in range(4) for z in range(4)]
-    spark = SparkSession.getActiveSession()
-    df = spark.createDataFrame(coords, "x long, y long, z long")
-    out = df.withColumn("m", morton_interleave([F.col("x"), F.col("y"), F.col("z")], bits=2))
-    vals = sorted(r.m for r in out.collect())
+    coords = np.array(
+        [(x, y, z) for x in range(4) for y in range(4) for z in range(4)], dtype=np.uint64
+    )
+    vals = sorted(int(m) for m in morton_interleave_np(coords, bits=2))
     assert vals == list(range(64))
 
 

@@ -7,7 +7,7 @@ isolates the engine's two hot compute kernels and measures their pure
 multiprocessing scaling, demonstrating that the *code* scales and the
 wall-clock ceiling is the box:
 
-- AES-GCM envelope encrypt kernel (the pandas-UDF inner function)
+- AES-GCM envelope encrypt kernel (the Arrow-UDF inner function)
 - Morton bucket+interleave kernel
 
 Prints one JSON line with per-level throughput and N→4N efficiencies.
@@ -29,18 +29,19 @@ AVG_LEN = 6000
 
 def _encrypt_task(seed: int) -> float:
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from cryptography.hazmat.primitives.ciphers.aead import AESGCM
 
     from pi2spark.crypto import make_encrypt_udf
 
     rng = np.random.default_rng(seed)
-    subjects = pd.Series([f"org{i % 40}/r{i % 9}" for i in range(ROWS_PER_TASK)])
-    texts = pd.Series(["x" * int(l) for l in rng.integers(18, AVG_LEN * 2, ROWS_PER_TASK)])
-    keys = {s: AESGCM.generate_key(bit_length=256) for s in set(subjects)}
+    subjects = pa.array([f"org{i % 40}/r{i % 9}" for i in range(ROWS_PER_TASK)])
+    texts = pa.array(["x" * int(l) for l in rng.integers(18, AVG_LEN * 2, ROWS_PER_TASK)])
+    keys = {s: AESGCM.generate_key(bit_length=256) for s in set(subjects.to_pylist())}
     fn = make_encrypt_udf(keys, "content").func
-    nbytes = int(texts.str.len().sum())
+    nbytes = pc.sum(pc.binary_length(texts)).as_py()
     t0 = time.time()
     fn(subjects, texts)
     return nbytes / (time.time() - t0)
