@@ -98,7 +98,7 @@ class _FilesPartition(InputPartition):
     root: str
     paths: tuple  # relative data-file paths
     schema_json: str  # logical read schema (StructType.json())
-    ops_json: str  # schema-evolution ops (Table.schema_ops())
+    sources_json: str  # logical column -> physical sources (Table.column_sources())
 
 
 def _load_table(options) -> "Table":
@@ -124,11 +124,8 @@ def _load_table(options) -> "Table":
 
 
 def _logical_schema(table: "Table", columns: str | None = None) -> StructType:
-    """The table's logical schema as a StructType, computed from
-    metadata only (no Spark job, no JVM): physical union schema with
-    evolution ops replayed. Add-ops carry Spark DDL type strings;
-    primitives are resolved here, and Spark re-validates the result
-    against the source schema at planning time.
+    """The table's logical schema (``Table.logical_schema``: metadata
+    only, no Spark job, no JVM), projected by ``columns``.
 
     ``columns`` (comma-separated) projects the schema — Spark 4.1's
     Python source API has no pruneColumns hook, so
@@ -137,144 +134,67 @@ def _logical_schema(table: "Table", columns: str | None = None) -> StructType:
     executor-side parquet reads then touch ONLY those columns' pages
     (plus whatever a pushed filter needs is re-applied by Spark on the
     projected rows, so filters must reference selected columns)."""
-    base = table.data_schema()
-    if base is None:
+    if table.data_schema() is None:
         raise Pi2SparkError(
             f"table at {table.root!r} has no persisted schema yet (no writes)"
         )
-    fields = list(base.fields)
-
-    def _find(name):
-        for i, f in enumerate(fields):
-            if f.name == name:
-                return i
-        return -1
-
-    for op in table.schema_ops():
-        if op["op"] == "rename":
-            i_old, i_new = _find(op["from"]), _find(op["to"])
-            if i_old >= 0 and i_new >= 0:
-                fields.pop(i_old)
-            elif i_old >= 0:
-                f = fields[i_old]
-                fields[i_old] = type(f)(op["to"], f.dataType, True)
-        elif op["op"] == "add":
-            if _find(op["name"]) < 0:
-                fields.append(_ddl_field(op["name"], op["type"]))
-        elif op["op"] == "drop":
-            i = _find(op["name"])
-            if i >= 0:
-                fields.pop(i)
-    if columns:
-        want = [c.strip() for c in columns.split(",") if c.strip()]
-        by_name = {f.name: f for f in fields}
-        missing = [c for c in want if c not in by_name]
-        if missing:
-            raise Pi2SparkError(
-                f"option('columns', ...) names unknown column(s) {missing}; "
-                f"table has {sorted(by_name)}"
-            )
-        fields = [by_name[c] for c in want]
-    return StructType(fields)
-
-
-def _ddl_field(name: str, ddl: str):
-    """StructField from a Spark DDL type string without a JVM: the
-    primitive vocabulary schema evolution actually uses. (Complex
-    types would need a session-side parser — add_column validates its
-    type through Spark already, so anything stored here is legal.)"""
-    from pyspark.sql import types as T
-
-    prims = {
-        "string": T.StringType(),
-        "int": T.IntegerType(),
-        "integer": T.IntegerType(),
-        "bigint": T.LongType(),
-        "long": T.LongType(),
-        "smallint": T.ShortType(),
-        "tinyint": T.ByteType(),
-        "double": T.DoubleType(),
-        "float": T.FloatType(),
-        "boolean": T.BooleanType(),
-        "binary": T.BinaryType(),
-        "date": T.DateType(),
-        "timestamp": T.TimestampType(),
-        "timestamp_ntz": T.TimestampNTZType(),
-    }
-    dt = prims.get(ddl.strip().lower())
-    if dt is None:
+    schema = table.logical_schema()
+    if not columns:
+        return schema
+    want = [c.strip() for c in columns.split(",") if c.strip()]
+    missing = [c for c in want if c not in schema.fieldNames()]
+    if missing:
         raise Pi2SparkError(
-            f"unsupported evolved-column type for the pi2spark source: {ddl!r}"
+            f"option('columns', ...) names unknown column(s) {missing}; "
+            f"table has {sorted(schema.fieldNames())}"
         )
-    return T.StructField(name, dt, True)
+    return StructType([schema[c] for c in want])
 
 
 def _pack_partitions(
     table: "Table", files, partition_bytes: int, columns: str | None = None
 ) -> list[_FilesPartition]:
+    """Read tasks for ``files``, packed to ~``partition_bytes`` each in
+    path order; one empty task when there are no files (Spark needs at
+    least one partition)."""
     from pi2spark.table import pack_consecutive
 
     schema_json = _logical_schema(table, columns).json()
-    ops_json = json.dumps(table.schema_ops())
+    sources_json = json.dumps(table.column_sources())
+    packs = pack_consecutive(sorted(files, key=lambda f: f.path), partition_bytes)
     return [
-        _FilesPartition(
-            table.root, tuple(f.path for f in pack), schema_json, ops_json
-        )
-        for pack in pack_consecutive(
-            sorted(files, key=lambda f: f.path), partition_bytes
-        )
+        _FilesPartition(table.root, tuple(f.path for f in pack), schema_json, sources_json)
+        for pack in packs or [[]]
     ]
 
 
 def _read_partition(part: _FilesPartition) -> Iterator:
-    """Executor-side: yield Arrow record batches for one file group,
-    projected to the logical schema (renames coalesced, missing
-    columns as NULLs) — the pyarrow mirror of ``apply_schema_ops``."""
+    """Executor-side: yield Arrow record batches for one file group
+    under the logical schema — each file's present sources read, bound
+    (``bind_logical``) and cast; a column with no source in the file
+    reads as NULL."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    schema = StructType.fromJson(json.loads(part.schema_json))
-    ops = json.loads(part.ops_json)
-    target = to_arrow_schema(schema)
-    def _name_chain(logical: str) -> list[str]:
-        # a renamed logical column may exist under ANY of its prior
-        # physical names (a→b→c leaves files carrying a, b, or c):
-        # walk the rename ops newest-first, unwinding one hop each —
-        # the transitive mirror of apply_schema_ops' in-order coalesce
-        chain = [logical]
-        for op in reversed(ops):
-            if op.get("op") == "rename" and op["to"] == chain[-1]:
-                chain.append(op["from"])
-        return chain
+    from pi2spark.table import bind_logical
 
+    target = to_arrow_schema(StructType.fromJson(json.loads(part.schema_json)))
+    sources = json.loads(part.sources_json)
     for rel in part.paths:
         path = os.path.join(part.root, rel)
-        # resolve each logical column to the physical name this file
-        # carries, then read ONLY those columns (footer-level
-        # projection: untouched columns' pages are never decoded —
-        # this is where the `columns` option's pushdown pays off, and
-        # dropped/renamed-away physical columns are never read at all)
+        # read ONLY the target columns' sources this file carries
+        # (footer-level projection: other columns' pages are never
+        # decoded — the `columns` option's pushdown, and dropped
+        # columns are never read at all)
         physical = set(pq.read_schema(path).names)
-        srcs = {
-            field.name: next(
-                (n for n in _name_chain(field.name) if n in physical), None
-            )
-            for field in target
-        }
-        read_cols = sorted({s for s in srcs.values() if s is not None})
-        if read_cols:
-            at = pq.read_table(path, columns=read_cols)
-            n = at.num_rows
-        else:  # no logical column exists physically: row count only
-            at, n = None, pq.ParquetFile(path).metadata.num_rows
-        cols = []
-        for field in target:
-            src = srcs[field.name]
-            if src is not None:
-                cols.append(at[src].cast(field.type))
-            else:
-                cols.append(pa.nulls(n, field.type))
+        read_cols = sorted({s for f in target for s in sources.get(f.name, ()) if s in physical})
+        # with no column to read this still carries the row count
+        at = bind_logical(pq.read_table(path, columns=read_cols), sources)
+        cols = [
+            at[f.name].cast(f.type) if f.name in at.column_names else pa.nulls(at.num_rows, f.type)
+            for f in target
+        ]
         yield from pa.table(cols, schema=target).to_batches()
 
 
@@ -328,12 +248,7 @@ class Pi2SparkBatchReader(DataSourceReader):
             int(snap_opt) if snap_opt is not None else None, self._preds
         )
         pb = int(self._options.get("partition_bytes", DEFAULT_PARTITION_BYTES))
-        cols = self._options.get("columns")
-        parts = _pack_partitions(table, files, pb, cols)
-        # Spark requires at least one partition even for an empty plan
-        return parts or [
-            _FilesPartition(table.root, (), _logical_schema(table, cols).json(), "[]")
-        ]
+        return _pack_partitions(table, files, pb, self._options.get("columns"))
 
     def read(self, partition):
         return _read_partition(partition)
@@ -424,11 +339,11 @@ class Pi2SparkStreamReader(DataSourceStreamReader):
         # (post-restart, `lo` is the checkpoint-committed offset)
         self._last_end = max(self._last_end, lo, hi)
         if hi <= lo:
-            return [self._empty_partition()]
+            return self._pack([])
         snaps = sorted(self._table.snapshots(), key=lambda s: s["snapshot_id"])
         in_range = [s for s in snaps if lo < s["snapshot_id"] <= hi]
         if not in_range:
-            return [self._empty_partition()]
+            return self._pack([])
         # resolve the consumption base: offset 0 = before the first
         # snapshot (full history); otherwise the lo snapshot must still
         # exist, or the range's head was expired from under the stream
@@ -472,17 +387,11 @@ class Pi2SparkStreamReader(DataSourceStreamReader):
                     "skip rewrites (rewritten rows are NOT re-delivered)"
                 )
             prev_paths, prev_id = cur_paths, s["snapshot_id"]
-        pb = int(self._options.get("partition_bytes", DEFAULT_PARTITION_BYTES))
-        parts = _pack_partitions(self._table, new_files, pb, self._options.get("columns"))
-        return parts or [self._empty_partition()]
+        return self._pack(new_files)
 
-    def _empty_partition(self):
-        return _FilesPartition(
-            self._table.root,
-            (),
-            _logical_schema(self._table, self._options.get("columns")).json(),
-            "[]",
-        )
+    def _pack(self, files):
+        pb = int(self._options.get("partition_bytes", DEFAULT_PARTITION_BYTES))
+        return _pack_partitions(self._table, files, pb, self._options.get("columns"))
 
     def read(self, partition):
         return _read_partition(partition)

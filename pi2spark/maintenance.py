@@ -80,6 +80,7 @@ from pi2spark.table import (
     DataFile,
     Table,
     align_spark_schema,
+    bind_logical,
     collect_data_files,  # noqa: F401 — importable here by name for tracing callers
     pack_consecutive,
     rewrite_file_groups,
@@ -571,6 +572,7 @@ def _cluster_attempt(
                 f"{curve}-merge-{pass_id}",
                 target_bytes=target_file_bytes,
                 sort_col="zkey",
+                transform=functools.partial(bind_logical, sources=_arrow_sources(table)),
                 wave_files=DEFAULT_WAVE_FILES,
                 task_prefix=prefix,
                 arrow=True,
@@ -741,27 +743,20 @@ def _cluster_with_shuffle(
 def _with_curve_key(tbl, columns, sources, curve, bits, sample_rows):
     """The one-task clustering transform on one concatenated group:
 
-    - a logical column whose group mixes physical sources (files from
-      both sides of a rename) coalesces into the first source present
-      and drops the others, so the output's stats and bloom for it
-      cover every row;
-    - ``zkey`` := ``zorder.curve_keys`` over the logical cluster
-      columns, bucketed on boundaries (``zorder.sample_bounds``) taken
-      from at most ``sample_rows`` evenly spaced rows of the group. It
-      replaces an existing ``zkey`` column. Keys are computed in
-      batches, so only one batch of values is ever in pandas form."""
+    - the group binds to the logical schema first (``bind_logical``), so
+      a group mixing both sides of a rename writes one column whose
+      stats and bloom cover every row;
+    - ``zkey`` := ``zorder.curve_keys`` over the cluster columns,
+      bucketed on boundaries (``zorder.sample_bounds``) taken from at
+      most ``sample_rows`` evenly spaced rows of the group. It replaces
+      an existing ``zkey`` column. Keys are computed in batches, so only
+      one batch of values is ever in pandas form."""
     import numpy as np
     import pyarrow as pa
 
-    for srcs in sources.values():
-        present = [c for c in srcs if c in tbl.column_names]
-        if len(present) > 1:
-            i = tbl.schema.get_field_index(present[0])
-            tbl = tbl.set_column(i, tbl.schema.field(i), _logical(tbl, present))
-            tbl = align_spark_schema(tbl.drop_columns(present[1:]))
+    tbl = bind_logical(tbl, sources)
     n = tbl.num_rows
-    values = [_logical(tbl, sources[c]) for c in columns]
-    values = [pa.nulls(n, pa.string()) if v is None else v for v in values]
+    values = [tbl[c] if c in tbl.column_names else pa.nulls(n, pa.string()) for c in columns]
     if n > sample_rows:
         pick = np.linspace(0, n - 1, sample_rows).astype(np.int64)
         bounds = {c: sample_bounds(v.take(pick).to_pandas(), bits) for c, v in zip(columns, values)}
@@ -785,13 +780,12 @@ def _cluster_in_one_task(table, spark, in_files, columns, curve, bits, sample_ro
     tiebreak)``, writes the file and returns its manifest entry. One
     Spark job: no sample job, no exchange, no stats read-back.
 
-    Logical names bind to each file's physical columns through
-    ``Table.column_sources`` (the output keeps physical names, as a
-    shred output does); the tiebreak is ``commit`` when the table has
-    it, else the last cluster column."""
+    The output is written under the logical schema (``bind_logical``);
+    the tiebreak is ``commit`` when the table has it, else the last
+    cluster column."""
     columns = list(columns)
     check_cluster_key(columns, bits, curve)
-    sources = table.column_sources()
+    sources = _arrow_sources(table)
     missing = [c for c in columns if c not in sources]
     if missing:
         raise Pi2SparkError(f"cluster columns {missing} are not in the table schema")
@@ -805,7 +799,7 @@ def _cluster_in_one_task(table, spark, in_files, columns, curve, bits, sample_ro
         spark,
         table.stats_columns(),
         bloom_cols=table.bloom_columns(),
-        sort_col=["zkey", *sources[tiebreak]],
+        sort_col=["zkey", tiebreak],
         transform=functools.partial(
             _with_curve_key, columns=columns, sources=sources, curve=curve, bits=bits,
             sample_rows=sample_rows,
@@ -818,16 +812,15 @@ def _cluster_in_one_task(table, spark, in_files, columns, curve, bits, sample_ro
 # ---------------------------------------------------------------------------
 
 
-def _logical(tbl, cols):
-    """One logical column of an Arrow table from its physical sources
-    (``Table.column_sources`` order): the first non-NULL of those the
-    table has, or None when it has none of them."""
-    import pyarrow.compute as pc
-
-    present = [tbl[c] for c in cols if c in tbl.column_names]
-    if not present:
-        return None
-    return present[0] if len(present) == 1 else pc.coalesce(*present)
+def _arrow_sources(table: Table) -> dict[str, list[str]]:
+    """``Table.column_sources()`` for an Arrow rewrite, whose outputs
+    are bound to the logical schema (``bind_logical``). Under schema
+    ops the logical schema first joins the persisted union schema, so
+    the reader schema has every name an output carries (a renamed
+    column's new one)."""
+    if table.schema_ops():
+        table._persist_schema(table.logical_schema())
+    return table.column_sources()
 
 
 def _put_column(tbl, name, values, spark_type: str):
@@ -843,37 +836,36 @@ def _put_column(tbl, name, values, spark_type: str):
     )
 
 
-def _tombstone(tbl, subjects, subject_cols, envelope_cols, flag_cols):
-    """The shred tombstone on one Arrow row group of one data file:
+def _tombstone(tbl, subjects, sources, subject_column, envelope_columns):
+    """The shred tombstone on one Arrow row group of one data file,
+    after binding it to the logical schema (``bind_logical`` with
+    ``sources``: a file written before a rename gains the new names,
+    and dropped columns leave it):
 
     - ``hit := subject IN subjects`` (a NULL subject is not a hit);
     - every envelope column present → NULL where ``hit``;
-    - ``shredded := coalesce(shredded, false) OR hit`` on every row.
-
-    Column lists name PHYSICAL columns (``Table.column_sources``) in
-    coalesce priority order, so a file written before a rename binds
-    its old names; members the file lacks read as NULL, exactly as
-    under the table's union schema. A file lacking every ``shredded``
-    source gains the flag under the highest-priority name."""
+    - ``shredded := coalesce(shredded, false) OR hit`` on every row
+      when the table has the flag; a file without it gains it."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    subj = _logical(tbl, subject_cols)
-    if subj is None:
-        hit = pa.repeat(False, tbl.num_rows)
-    else:
+    tbl = bind_logical(tbl, sources)
+    if subject_column in tbl.column_names:
+        subj = tbl[subject_column]
         hit = pc.is_in(subj, value_set=pa.array(subjects, type=subj.type))
-    for c in envelope_cols:
+    else:
+        hit = pa.repeat(False, tbl.num_rows)
+    for c in envelope_columns:
         if c in tbl.column_names:
             i = tbl.schema.get_field_index(c)
             env = tbl[c]
             tbl = tbl.set_column(
                 i, tbl.schema.field(i), pc.if_else(hit, pa.scalar(None, env.type), env)
             )
-    if flag_cols:
-        cur = _logical(tbl, flag_cols)
+    if "shredded" in sources:
+        cur = tbl["shredded"] if "shredded" in tbl.column_names else None
         flag = hit if cur is None else pc.or_(pc.fill_null(cur, False), hit)
-        tbl = _put_column(tbl, flag_cols[0], flag, "boolean")
+        tbl = _put_column(tbl, "shredded", flag, "boolean")
     return tbl
 
 
@@ -906,9 +898,9 @@ def shred(
     of ``wave_files`` files, no Spark SQL plan, no stats read-back;
     task memory is bounded by one row group. Oversized files are not
     split and small ones not merged — that is ``compact``'s job — so
-    ``target_file_bytes`` is ignored. Rewritten files keep their
-    physical schema (logical names resolve through
-    ``Table.column_sources``), like any file untouched by evolution.
+    ``target_file_bytes`` is ignored. Rewritten files are bound to the
+    logical schema (``bind_logical``): renamed columns take their new
+    names and dropped columns leave the file.
 
     Conflict re-planning (same protocol as ``compact``): a disjoint
     version race re-applies through ``commit_with_retry``; a winner
@@ -933,20 +925,15 @@ def shred(
         affected = [f for f in snap.files if pred.may_match(f)]
         if not affected:
             return PassResult("shred", pass_id, snap.snapshot_id, 0, 0, 0, time.time() - t0, skipped=True)
-        sources = table.column_sources()
+        sources = _arrow_sources(table)
         if subject_column not in sources:
             raise Pi2SparkError(f"subject column {subject_column!r} is not in the table schema")
-        # physical columns no logical column reads (dropped — e.g. a
-        # dropped PII column's envelope) are erased on hit rows too:
-        # the 1:1 rewrite keeps them on disk
-        live = {c for cols in sources.values() for c in cols}
-        dropped = [f.name for f in table.data_schema().fields if f.name not in live]
         tombstone = functools.partial(
             _tombstone,
             subjects=subjects,
-            subject_cols=sources[subject_column],
-            envelope_cols=[c for env in envelope_columns for c in sources.get(env, [])] + dropped,
-            flag_cols=sources.get("shredded", []),
+            sources=sources,
+            subject_column=subject_column,
+            envelope_columns=list(envelope_columns),
         )
         results = _rewrite_files_in_waves(
             table,
@@ -2020,38 +2007,17 @@ def expire_snapshots(
     meta["snapshots"] = retained
     table._write_version(version + 1, meta)
 
-    # Best-effort physical cleanup; idempotent and re-runnable. A
-    # thread pool overlaps the unlink round-trips — on object storage
-    # these are HTTP DELETEs (batchable), and even locally this host's
-    # intermittent syscall stalls made serial deletes the expire
-    # phase's entire cost. In distributed mode the deletable list
-    # STREAMS through the pool (bounded driver memory); the expired
-    # shard JSONs are still on disk here — they are deleted last.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _rm(p: str) -> None:
-        if os.path.exists(p):
-            os.remove(p)
-
-    n_deleted = 0
-    # 32 in-flight unlinks: each is one blocking syscall round-trip
-    # (HTTP DELETE on object stores; intermittently-stalling virtio
-    # syscalls here) — absorption scales with in-flight count, and the
-    # pool is idle the rest of the pass
-    with ThreadPoolExecutor(max_workers=32) as ex:
-        if distribute:
-            for _ in ex.map(
-                _rm,
-                (
-                    os.path.join(table.root, r.path)
-                    for r in deletable_df.toLocalIterator()
-                ),
-            ):
-                n_deleted += 1
-        else:
-            n_deleted = len(deletable)
-            list(ex.map(_rm, (os.path.join(table.root, rel) for rel in sorted(deletable))))
-        list(ex.map(_rm, (os.path.join(table._meta_dir, name) for name in sorted(deletable_meta))))
+    # Best-effort physical cleanup; idempotent and re-runnable. In
+    # distributed mode the deletable list streams in from the executors
+    # (``toLocalIterator``), which still read the expired shard JSONs:
+    # those are deleted last.
+    if distribute:
+        n_deleted = _unlink_all(
+            os.path.join(table.root, r.path) for r in deletable_df.toLocalIterator()
+        )
+    else:
+        n_deleted = _unlink_all(os.path.join(table.root, rel) for rel in sorted(deletable))
+    _unlink_all(os.path.join(table._meta_dir, name) for name in sorted(deletable_meta))
     return {
         "expired_snapshots": len(expired),
         "deleted_files": n_deleted,
@@ -2119,32 +2085,37 @@ def remove_orphans(
             sc.parallelize(pass_dirs, n_slices).mapPartitions(list_part), "path string"
         )
         orphans_df = listing_df.join(referenced_df, "path", "left_anti")
-        deleted = 0
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _rm(p: str) -> None:
-            if os.path.exists(p):
-                os.remove(p)
-
-        with ThreadPoolExecutor(max_workers=16) as ex:
-            for _ in ex.map(
-                _rm, (os.path.join(table.root, r.path) for r in orphans_df.toLocalIterator())
-            ):
-                deleted += 1
+        deleted = _unlink_all(
+            os.path.join(table.root, r.path) for r in orphans_df.toLocalIterator()
+        )
         return {"deleted": deleted, "distributed": True}
 
     referenced: set[str] = set()
     for s in snaps:
         referenced |= table.manifest_data_paths(s)
-    deleted = 0
-    for dirpath, _dirnames, filenames in os.walk(data_root):
-        for name in filenames:
-            abs_p = os.path.join(dirpath, name)
-            rel = os.path.relpath(abs_p, table.root)
-            if rel in referenced:
-                continue
-            if os.path.getmtime(abs_p) * 1000 >= cutoff_ms:
-                continue  # possibly an in-flight write
-            os.remove(abs_p)
-            deleted += 1
+    orphans = [
+        abs_p
+        for dirpath, _dirnames, filenames in os.walk(data_root)
+        for abs_p in (os.path.join(dirpath, name) for name in filenames)
+        if os.path.relpath(abs_p, table.root) not in referenced
+        # younger than the cutoff: possibly an in-flight write
+        and os.path.getmtime(abs_p) * 1000 < cutoff_ms
+    ]
+    deleted = _unlink_all(orphans)
     return {"deleted": deleted, "referenced": len(referenced), "distributed": False}
+
+
+def _unlink_all(paths) -> int:
+    """Delete ``paths`` (any iterable, a streamed one included) with 32
+    unlinks in flight, skipping files already gone; returns how many
+    paths it was given. Each unlink is one blocking round trip (an HTTP
+    DELETE on object stores, an intermittently stalling syscall on a
+    local disk), so overlapping them is what absorbs the stalls."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def rm(p: str) -> None:
+        if os.path.exists(p):
+            os.remove(p)
+
+    with ThreadPoolExecutor(max_workers=32) as ex:
+        return sum(1 for _ in ex.map(rm, paths))

@@ -214,14 +214,15 @@ def collect_data_files(
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def align_spark_schema(tbl, new_types: dict | None = None, schemas=()):
+def align_spark_schema(tbl, new_types: dict | None = None, schemas=(), renamed=None):
     """Make Spark's footer schema JSON (when ``tbl`` carries one) list
     exactly ``tbl``'s columns, in order, so a schema-less Spark read of
     the output sees what the file holds. A column keeps its JSON entry
     from ``tbl`` or from one of ``schemas`` (the Arrow schemas of
-    concatenated inputs); a column none of them knows gets the Spark
-    type name ``new_types[name]``, and without one the JSON is dropped
-    (Spark then maps the Parquet schema itself)."""
+    concatenated inputs), or takes the entry of the column
+    ``renamed[name]`` under its own name; a column none of them knows
+    gets the Spark type name ``new_types[name]``, and without one the
+    JSON is dropped (Spark then maps the Parquet schema itself)."""
     docs = [s.metadata.get(_SPARK_ROW_METADATA) for s in [tbl.schema, *schemas] if s.metadata]
     docs = list(dict.fromkeys(d for d in docs if d))
     if not docs:
@@ -233,6 +234,9 @@ def align_spark_schema(tbl, new_types: dict | None = None, schemas=()):
     for d in docs:
         for f in json.loads(d)["fields"]:
             known.setdefault(f["name"], f)
+    for new, old in (renamed or {}).items():
+        if old in known:
+            known.setdefault(new, {**known[old], "name": new})
     new_types = new_types or {}
     meta = dict(tbl.schema.metadata)
     if all(n in known or n in new_types for n in tbl.column_names):
@@ -361,6 +365,9 @@ def rewrite_file_groups(
       groups one at a time through ``transform`` (``pa.Table ->
       pa.Table``) into one writer — row order kept, task memory bounded
       by one row group. A group's inputs must share one schema.
+
+    Every caller's ``transform`` binds its input to the logical schema
+    first (``bind_logical``), so outputs carry the logical schema.
 
     This exists because Spark's scan packing cannot preserve file
     order (FileSourceScan sorts splits by size before binning), which
@@ -523,6 +530,60 @@ def _replay_schema_ops(src: dict[str, list[str]], ops: list[dict]) -> dict[str, 
         elif op["op"] == "drop":
             src.pop(op["name"], None)
     return src
+
+
+def bind_logical(tbl, sources: dict[str, list[str]]):
+    """Bind one Arrow table's physical columns to the logical schema
+    (``sources`` is ``Table.column_sources()``): each logical column with
+    a source present becomes the first non-NULL of its present sources,
+    under its logical name and the first source's type; physical columns
+    no logical column reads (dropped ones) leave; logical columns with
+    no source present stay absent (readers see them as NULL). Spark's
+    footer schema JSON follows (``align_spark_schema``). The one binder
+    every Arrow reader and rewrite uses — ``Table.apply_schema_ops`` is
+    its Spark twin. Returns ``tbl`` itself when every column is its own
+    only source (always, for a table with no schema ops)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    have = set(tbl.column_names)
+    present = {c: [s for s in srcs if s in have] for c, srcs in sources.items()}
+    present = {c: p for c, p in present.items() if p}
+    if len(present) == tbl.num_columns and all(p == [c] for c, p in present.items()):
+        return tbl
+    arrays, fields = [], []
+    for c, p in present.items():
+        first = tbl.schema.field(p[0])
+        arrays.append(
+            tbl[p[0]] if len(p) == 1 else pc.coalesce(*(tbl[s].cast(first.type) for s in p))
+        )
+        fields.append(first.with_name(c))
+    out = pa.Table.from_arrays(arrays, schema=pa.schema(fields, metadata=tbl.schema.metadata))
+    return align_spark_schema(out, renamed={c: p[0] for c, p in present.items()})
+
+
+def ddl_type(ddl: str):
+    """The Spark DataType of a primitive DDL type string ("string",
+    "bigint", ...), resolved without a JVM; None for any other string
+    (complex types parse through a session)."""
+    from pyspark.sql import types as T
+
+    return {
+        "string": T.StringType(),
+        "int": T.IntegerType(),
+        "integer": T.IntegerType(),
+        "bigint": T.LongType(),
+        "long": T.LongType(),
+        "smallint": T.ShortType(),
+        "tinyint": T.ByteType(),
+        "double": T.DoubleType(),
+        "float": T.FloatType(),
+        "boolean": T.BooleanType(),
+        "binary": T.BinaryType(),
+        "date": T.DateType(),
+        "timestamp": T.TimestampType(),
+        "timestamp_ntz": T.TimestampNTZType(),
+    }.get(ddl.strip().lower())
 
 
 class Table:
@@ -1384,48 +1445,70 @@ class Table:
 
     def apply_schema_ops(self, df: DataFrame) -> DataFrame:
         """Project a physically-read DataFrame to the CURRENT logical
-        schema. Data files are never rewritten by evolution (Iceberg's
-        rule): a file written before ``rename_column(old, new)`` still
-        carries ``old`` physically, one written after carries ``new``,
-        and the physical union schema holds both — this projection
-        coalesces them into the logical column. Renames on columns the
-        frame lacks are no-ops, so the projection is valid for every
-        snapshot (time travel included). The Spark-written maintenance
-        rewrites route through this too, so their outputs are upgraded
-        to the logical schema as a side effect; the Arrow per-file
-        rewrites (shred, the cluster merge) keep each file's physical
-        schema (shred binds logical names via ``column_sources``)."""
-        ops = self.schema_ops()
-        if not ops:
+        schema in one ``select``. Data files are never rewritten by
+        evolution (Iceberg's rule): a file written before
+        ``rename_column(old, new)`` still carries ``old`` physically, one
+        written after carries ``new``, and the physical union schema
+        holds both. Each logical column is the coalesce of its
+        ``column_sources`` the frame has, or a typed NULL when it has
+        none, so the projection is valid for every snapshot (time travel
+        included). Every rewrite writes this logical schema: the
+        Spark-planned ones through this projection, the Arrow ones
+        through its twin ``bind_logical``."""
+        if not self.schema_ops():
             return df
         from pyspark.sql import functions as F
 
-        for op in ops:
-            if op["op"] == "rename":
-                old, new = op["from"], op["to"]
-                if old in df.columns and new in df.columns:
-                    df = df.withColumn(new, F.coalesce(F.col(new), F.col(old))).drop(old)
-                elif old in df.columns:
-                    df = df.withColumnRenamed(old, new)
-            elif op["op"] == "add":
-                if op["name"] not in df.columns:
-                    df = df.withColumn(op["name"], F.lit(None).cast(op["type"]))
-            elif op["op"] == "drop":
-                if op["name"] in df.columns:
-                    df = df.drop(op["name"])
-        return df
+        sources = self.column_sources()
+        have = set(df.columns)
+        cols = []
+        for f in self.logical_schema():
+            present = [F.col(s) for s in sources.get(f.name, ()) if s in have]
+            if not present:
+                col = F.lit(None).cast(f.dataType)
+            else:
+                col = present[0] if len(present) == 1 else F.coalesce(*present)
+            cols.append(col.alias(f.name))
+        return df.select(*cols)
 
     def column_sources(self) -> dict[str, list[str]]:
-        """Logical column -> the physical union-schema columns that
-        ``apply_schema_ops`` coalesces into it, highest priority first
-        (a rename's new name before its old one). A data file carries
-        some subset of them; its logical value is the first non-NULL.
-        Lets a per-file rewrite that never builds a DataFrame (the
-        shred tombstone) bind logical names to a file's physical
-        columns."""
+        """Logical column -> the physical union-schema columns that hold
+        its values, highest priority first (a rename's new name before
+        its old one): the one replay of the schema ops. A data file
+        carries some subset of them; its logical value is the first
+        non-NULL. Every reader and rewrite binds through it
+        (``apply_schema_ops``, ``bind_logical``, the ``pi2spark``
+        source)."""
         schema = self.data_schema()
         src = {f.name: [f.name] for f in schema.fields} if schema is not None else {}
         return _replay_schema_ops(src, self.schema_ops())
+
+    def logical_schema(self):
+        """The logical schema as a StructType, from metadata alone (no
+        JVM): each ``column_sources`` column takes the union-schema
+        field of its first source under its logical name, or — with no
+        source — the type its ``add_column`` recorded. Every field is
+        nullable."""
+        from pyspark.sql import types as T
+
+        schema = self.data_schema()
+        union = {f.name: f for f in schema.fields} if schema is not None else {}
+        ops = self.schema_ops()
+        added = {}
+        for i, op in enumerate(ops):
+            if op["op"] == "add":
+                # follow the added name through the later ops
+                for now in _replay_schema_ops({op["name"]: []}, ops[i + 1:]):
+                    added[now] = op["type"]
+        fields = []
+        for name, srcs in _replay_schema_ops({n: [n] for n in union}, ops).items():
+            if srcs:
+                f = union[srcs[0]]
+                fields.append(T.StructField(name, f.dataType, True, f.metadata))
+            else:
+                ddl = added[name]
+                fields.append(T.StructField(name, ddl_type(ddl) or T._parse_datatype_string(ddl), True))
+        return T.StructType(fields)
 
     def resolve_columns(self, names: Sequence[str], since: int = 0) -> list[str | None]:
         """Today's logical names of ``names`` as they stood after the
@@ -1437,10 +1520,17 @@ class Table:
         by_source = {s: logical for logical, sources in now.items() for s in sources}
         return [by_source.get(n) for n in names]
 
-    def _logical_columns(self) -> list[str]:
-        """Column names of the current logical schema (physical union
-        with evolution ops applied)."""
-        return list(self.column_sources())
+    def _check_new_name(self, name: str) -> None:
+        """Refuse ``name`` for a new column when the physical union
+        schema carries it or any schema op named it: without per-field
+        ids (Iceberg's fix) a reused name would bind old files' bytes
+        (a dropped column's values, or a renamed-away column's)."""
+        schema = self.data_schema()
+        named = {op.get(k) for op in self.schema_ops() for k in ("name", "from", "to")}
+        if name in named or (schema is not None and name in schema.fieldNames()):
+            raise Pi2SparkError(
+                f"column {name!r} exists, or an earlier schema change used the name"
+            )
 
     def add_column(self, name: str, dtype: str, pii: bool = False) -> None:
         """Add a nullable column to the logical schema (metadata-only —
@@ -1453,30 +1543,13 @@ class Table:
         from pyspark.sql import types as T
         from pyspark.sql.types import StructField, StructType
 
-        if name in self._logical_columns():
-            raise Pi2SparkError(f"column {name!r} already exists")
-        if any(
-            op["op"] == "drop" and op["name"] == name for op in self.schema_ops()
-        ):
-            # without per-field ids (Iceberg's fix) a re-add would
-            # resurrect the dropped column's values from old files
-            raise Pi2SparkError(f"column {name!r} was dropped and cannot be re-added")
+        self._check_new_name(name)
         if isinstance(dtype, T.DataType):
             dt = dtype
         else:
-            atomic = {
-                "string": T.StringType(), "bigint": T.LongType(),
-                "long": T.LongType(), "int": T.IntegerType(),
-                "integer": T.IntegerType(), "double": T.DoubleType(),
-                "float": T.FloatType(), "boolean": T.BooleanType(),
-                "binary": T.BinaryType(), "timestamp": T.TimestampType(),
-                "date": T.DateType(),
-            }
-            dt = atomic.get(dtype)
-            if dt is None:
-                # complex DDL (arrays/structs) parses through the active
-                # session's DDL parser
-                dt = T._parse_datatype_string(dtype)
+            # complex DDL (arrays/structs) parses through the active
+            # session's DDL parser
+            dt = ddl_type(dtype) or T._parse_datatype_string(dtype)
         version = self.current_version()
         meta = self._metadata(version)
         meta.setdefault("schema_ops", []).append(
@@ -1525,7 +1598,7 @@ class Table:
         absent columns are skipped at collection; old files keep their
         stats under the old name and simply stop pruning, exactly
         Iceberg's behavior for renamed partition sources)."""
-        names = self._logical_columns()
+        names = self.column_sources()
         version = self.current_version()
         meta = self._metadata(version)
         # an encrypted table's PII column exists only in the protection
@@ -1541,8 +1614,9 @@ class Table:
             prot_names = {f.name for f in _ST.fromJson(_json.loads(prot0["document"])).fields}
         if old not in names and old not in prot_names:
             raise Pi2SparkError(f"column {old!r} does not exist")
-        if new in names or new in prot_names:
+        if new in prot_names:
             raise Pi2SparkError(f"column {new!r} already exists")
+        self._check_new_name(new)
         ops = meta.setdefault("schema_ops", [])
         ops.append({"op": "rename", "from": old, "to": new})
 
@@ -1576,6 +1650,7 @@ class Table:
             if was_pii:
                 # keep the envelope naming convention intact: the
                 # envelope column rides along logically
+                self._check_new_name(f"{new}_enc")
                 ops.append({"op": "rename", "from": f"{old}_enc", "to": f"{new}_enc"})
 
         props = meta.setdefault("properties", {})
@@ -1598,7 +1673,7 @@ class Table:
         never be re-added (``add_column`` rejects it): without
         per-field ids — Iceberg's solution — a re-add would resurrect
         pre-drop values from old files."""
-        names = self._logical_columns()
+        names = self.column_sources()
         version = self.current_version()
         meta = self._metadata(version)
         prot = meta.get("protection")

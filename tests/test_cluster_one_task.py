@@ -107,9 +107,9 @@ def test_one_file_incremental_cluster_runs_one_spark_job(spark, tmp_path):
 
 def test_cluster_over_a_rename_uses_logical_values(spark, tmp_path):
     """A backlog written before ``repo`` became ``owner`` clusters on the
-    logical column; a later group holding both sides of the rename
-    coalesces them into one physical column, so its stats cover every
-    row."""
+    logical column and writes it under the logical name; a later group
+    holding both sides of the rename coalesces them into one column, so
+    its stats cover every row."""
     t = _table(spark, str(tmp_path / "tbl"))
     t.rename_column("repo", "owner")
     cols = ["owner", "lang", "path"]
@@ -117,8 +117,8 @@ def test_cluster_over_a_rename_uses_logical_values(spark, tmp_path):
     assert res.details["mode"] == "one-task"
     out = t.snapshot().files[0]
     got = pq.read_table(os.path.join(t.root, out.path))
-    assert "repo" in got.column_names and "owner" not in got.column_names
-    bounds = {c: sample_bounds(got[p].to_pandas(), 10) for c, p in zip(cols, COLS)}
+    assert "owner" in got.column_names and "repo" not in got.column_names
+    bounds = {c: sample_bounds(got[c].to_pandas(), 10) for c in cols}
     assert bounds["owner"][0] == "org00/r"
 
     scan = t.scan(spark)

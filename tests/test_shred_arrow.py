@@ -124,8 +124,9 @@ def test_shred_adds_missing_flag_column(spark, tmp_path):
 
 
 def test_shred_erases_dropped_columns_on_hit_rows(spark, tmp_path):
-    """The 1:1 rewrite keeps a dropped column's bytes in the file; a
-    forgotten subject's values there are erased like its envelopes."""
+    """The 1:1 rewrite is bound to the logical schema: a dropped
+    column's bytes leave the rewritten file for every row, a forgotten
+    subject's included."""
     df = spark.createDataFrame(
         [("alice", b"c1", b"x1"), ("bob", b"c2", b"x2")],
         "repo string, content_enc binary, extra_enc binary",
@@ -135,8 +136,9 @@ def test_shred_erases_dropped_columns_on_hit_rows(spark, tmp_path):
     t.drop_column("extra_enc")
     shred(t, spark, ["alice"])
     (f,) = t.snapshot().files
-    raw = pq.read_table(os.path.join(t.root, f.path)).to_pylist()
-    assert {(r["repo"], r["extra_enc"]) for r in raw} == {("alice", None), ("bob", b"x2")}
+    raw = pq.read_table(os.path.join(t.root, f.path))
+    assert "extra_enc" not in raw.column_names
+    assert {(r["repo"], r["content_enc"]) for r in raw.to_pylist()} == {("alice", None), ("bob", b"c2")}
 
 
 def test_one_spark_job_per_shred_wave(spark, tmp_path):
